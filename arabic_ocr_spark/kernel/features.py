@@ -16,6 +16,7 @@ from __future__ import annotations
 import numpy as np
 
 from .components import label_components, largest_label, split_largest_component
+from .memo import BoundedMemo
 
 __all__ = [
     "vertical_transitions",
@@ -194,11 +195,29 @@ def recognize_dots(char_img: np.ndarray, _labeled=None) -> tuple[int, int, int]:
     return 2, 1, max_label - 1
 
 
+# one per worker process; a slice key is (shape, dtype, bytes)
+CHAR_MEMO = BoundedMemo(4 << 20)
+
+
 def recognize_char(char_img: np.ndarray) -> list:
     """Character segment -> 9-slot feature vector, or [] for degenerate
     segments (the empty-segment rejection that self-corrects
     over-segmentation).  May raise on all-background segments (the caller's
-    try/except treats that as rejection too)."""
+    try/except treats that as rejection too).
+
+    A pure function of the slice's pixels, memoized on their exact content:
+    a repeated slice is looked up, a raising slice is recomputed every time,
+    and every call returns a fresh list."""
+    data = char_img.tobytes()
+    key = (char_img.shape, char_img.dtype.str, data)
+    fv = CHAR_MEMO.get(key)
+    if fv is None:
+        fv = _recognize_char(char_img)
+        CHAR_MEMO.put(key, fv, len(data))
+    return list(fv)
+
+
+def _recognize_char(char_img: np.ndarray) -> list:
     img_dotted = char_img.copy()
     # single labeling pass shared by the dots-removal and dots-recognition
     # stages (the reference labels the same image twice)

@@ -22,7 +22,7 @@ from .geometry import deskew
 from .imgops import binarize_inv
 from .segmentation import TemplateSpec, contour_seg, segment_lines, word_separators
 
-__all__ = ["ExtractionResult", "extract_page", "iter_words"]
+__all__ = ["ExtractionResult", "extract_page", "iter_words", "page_lines"]
 
 
 @dataclass
@@ -35,22 +35,29 @@ class ExtractionResult:
     feat_vectors: list = field(default_factory=list, repr=False)
 
 
-def iter_words(image: np.ndarray, skip_deskew: bool = False) -> Iterator[tuple[np.ndarray, list, int]]:
-    """Grayscale page -> (word_image, char_cut_points, line_index) in the
-    reference's processing order (lines top-down, words right-to-left).
-    Word-level errors propagate; callers decide the failure policy."""
+def page_lines(image: np.ndarray, skip_deskew: bool = False) -> list[np.ndarray]:
+    """Grayscale page -> binarized, deskewed line crops, top-down."""
     binary = binarize_inv(image)
     if not skip_deskew:
         binary = deskew(binary)
-    lines = segment_lines(binary)
+    return segment_lines(binary)
+
+
+def iter_words(
+    lines: list[np.ndarray], templates: list[TemplateSpec] | None = None
+) -> Iterator[tuple[np.ndarray, list, int]]:
+    """Line crops -> (word_image, char_cut_points, line_index) in the
+    reference's processing order (lines top-down, words right-to-left).
+    The one word loop: extraction, training and the glyph harness all
+    segment through it.  Word-level errors propagate; callers decide the
+    failure policy."""
     for line_idx, line in enumerate(lines):
         seps, baseline = word_separators(line)
         previous_width = line.shape[1]
         for i in range(len(seps) - 1, -1, -1):
             word = line[:, int(seps[i]):previous_width]
             previous_width = int(seps[i])
-            cuts = contour_seg(word, baseline)
-            yield word, cuts, line_idx
+            yield word, contour_seg(word, baseline, templates), line_idx
 
 
 def extract_page(
@@ -69,23 +76,14 @@ def extract_page(
     res = ExtractionResult()
     recognized = ""
     try:
-        binary = binarize_inv(image)
-        if not skip_deskew:
-            binary = deskew(binary)
-        lines = segment_lines(binary)
+        lines = page_lines(image, skip_deskew)
         res.n_lines = len(lines)
-        for line in lines:
-            seps, baseline = word_separators(line)
-            previous_width = line.shape[1]
-            for i in range(len(seps) - 1, -1, -1):
-                word = line[:, int(seps[i]):previous_width]
-                previous_width = int(seps[i])
-                cuts = contour_seg(word, baseline, templates)
-                fvs = batch_get_feat_vectors(word, cuts)
-                if keep_feat_vectors:
-                    res.feat_vectors.append([list(fv) for fv in fvs])
-                recognized += " " + match_feat_to_char(model, fvs)
-                res.n_words += 1
+        for word, cuts, _line_idx in iter_words(lines, templates):
+            fvs = batch_get_feat_vectors(word, cuts)
+            if keep_feat_vectors:
+                res.feat_vectors.append([list(fv) for fv in fvs])
+            recognized += " " + match_feat_to_char(model, fvs)
+            res.n_words += 1
     except Exception as exc:  # reference-crash-equivalent turn
         return ExtractionResult(text="", ok=False, err=f"{type(exc).__name__}: {exc}")
     res.text = recognized

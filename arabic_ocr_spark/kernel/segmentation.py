@@ -35,6 +35,7 @@ from .imgops import (
     vertical_projection,
     zero_run_gaps,
 )
+from .memo import BoundedMemo
 from .ncc import template_match_points
 
 __all__ = [
@@ -134,10 +135,15 @@ def _plus_dilate(mask: np.ndarray) -> np.ndarray:
     return out
 
 
+# one per worker process; a contour key is (word height, baseline_org,
+# left-clipped, right-clipped, points relative to their minimum x, values)
+CONTOUR_MEMO = BoundedMemo(2 << 20)
+_INT16_MAX = np.iinfo(np.int16).max
+
+
 def contour_seg(image: np.ndarray, baseline_org: int, templates: list[TemplateSpec] | None = None) -> list:
     """Word image -> ascending list of character cut x-positions
     (reference preprocess.py:272-475)."""
-    templates = templates or []
     character_indecies: list = []
 
     contours = find_external_contours(image)
@@ -151,103 +157,140 @@ def contour_seg(image: np.ndarray, baseline_org: int, templates: list[TemplateSp
     for area, _i, cnt in with_area:
         if area < 1:
             break
-
-        # leftmost point's x (first minimum in point order)
-        leftmost_x = int(cnt[int(np.argmin(cnt[:, 0])), 0])
-        character_indecies.append(leftmost_x)
-
-        x_arr = cnt[:, 0]
-        y_arr = cnt[:, 1]
-
-        # raster of the contour points only (values are 255 on a binary image)
-        img_cnt = np.zeros(image.shape, np.uint8)
-        img_cnt[y_arr, x_arr] = image[y_arr, x_arr]
-
-        baseline = int(most_frequent(y_arr))
-
-        # template suppression: all matches computed on the pristine raster,
-        # then whitening / extra cuts applied
-        matches = [(spec, *template_match_points(img_cnt, spec.image, spec.threshold)) for spec in templates]
-        for spec, points, width in matches:
-            if spec.action == "whiten":
-                for p in points:
-                    img_cnt[:, p:p + width] = 255
-            elif spec.action == "whiten_inset":
-                for p in points:
-                    img_cnt[:, p + 3:p + width - 5] = 255
-            elif spec.action == "cut_after":
-                for p in points:
-                    character_indecies.append(p + width)
-
-        # runs of >2 consecutive contour points with y in [baseline-1,
-        # baseline+2] — vectorized run detection; a run still open at the
-        # end of the point list is dropped, as in the reference's scan
-        near = (
-            (y_arr == baseline) | (y_arr == baseline - 1)
-            | (y_arr == baseline + 1) | (y_arr == baseline + 2)
-        ).astype(np.int8)
-        dn = np.empty(near.shape, dtype=np.int8)
-        dn[0] = near[0]
-        np.subtract(near[1:], near[:-1], out=dn[1:])
-        run_starts = np.flatnonzero(dn == 1)
-        run_ends = np.flatnonzero(dn == -1)  # exclusive; unterminated run dropped
-        run_starts = run_starts[: len(run_ends)]
-        keep = (run_ends - run_starts) > 2
-        point_positions = run_ends[keep]
-        length_consective = (run_ends - run_starts)[keep]
-
-        segment_points: list[int] = []
-        baseline_local = baseline
-        if abs(baseline - baseline_org) > 2:
-            baseline_local = baseline_org
-
-        above = img_cnt[int(baseline_local / 2):baseline_local - 1, :]
-        below = img_cnt[baseline_local + 2:, :]
-        col_clear = ~np.logical_or((above == 255).any(axis=0), (below == 255).any(axis=0))
-        for i, ln in zip(point_positions.tolist(), length_consective.tolist()):
-            sub_x = x_arr[i - ln:i]
-            candidates = sub_x[col_clear[sub_x]]
-            if len(candidates):
-                segment_points.append(int(candidates[len(candidates) // 2]))
-
-        if len(segment_points) < 1:
-            continue
-
-        segment_points.sort()
-        delete_point = False
-        for i in range(1, len(segment_points)):
-            if (img_cnt[:baseline - 1, segment_points[i - 1]:segment_points[i]] == 0).all():
-                delete_point = True
-                segment_points[i - 1] = -1
-        if delete_point:
-            segment_points.remove(-1)  # only the first -1, as in the reference
-
-        if len(segment_points) > 1:
-            next_last_seg_point = segment_points[1]
+        if templates:
+            # template matching reads the whole word raster: no memo
+            img_cnt = np.zeros(image.shape, np.uint8)
+            img_cnt[cnt[:, 1], cnt[:, 0]] = image[cnt[:, 1], cnt[:, 0]]
+            character_indecies.extend(_contour_cuts(img_cnt, cnt[:, 0], cnt[:, 1], baseline_org, templates))
         else:
-            next_last_seg_point = img_cnt.shape[1]
-        last_seg_point = segment_points[0]
-        last_seg_hp = horizontal_projection(img_cnt[:baseline, last_seg_point:next_last_seg_point])
-        first_non_zero_index = int((last_seg_hp != 0).argmax())
-
-        # the drawn/thickened contour, built only here: the trailing-glyph
-        # heuristic is its sole consumer and most contours exit earlier
-        cnt_mask = np.zeros(image.shape, dtype=bool)
-        cnt_mask[y_arr, x_arr] = True
-        img_drawn = _plus_dilate(cnt_mask)
-
-        if (
-            (first_non_zero_index / last_seg_hp.shape[0]) < 0.85
-            and (last_seg_hp[first_non_zero_index:] != 0).all()
-            and (img_drawn[baseline - 1:baseline + 2, 0:last_seg_point]).any()
-            and not (img_drawn[0:baseline - 2, 0:last_seg_point]).any()
-            and not (img_drawn[baseline + 3:, 0:last_seg_point]).any()
-        ):
-            segment_points = segment_points[1:]  # trailing open glyph: drop first cut
-
-        segment_points = [p for p in segment_points if p != -1]
-        character_indecies.extend(segment_points)
+            character_indecies.extend(_memo_contour_cuts(image, cnt, baseline_org))
 
     character_indecies.extend(xcoords)
     character_indecies.sort()
     return character_indecies
+
+
+def _memo_contour_cuts(image: np.ndarray, cnt: np.ndarray, baseline_org: int) -> list:
+    """_contour_cuts of one contour without templates, memoized on what it
+    reads.  Outside the contour's own points the contour raster is zero, so
+    the cuts depend on the word only through its height, whether the
+    contour touches x = 0 (where the drawn contour's footprint is clipped)
+    and whether it touches the right edge (a leftover -1 cut slices up to
+    the last column); the cuts of a contour translated along x shift with
+    it.  The cuts are computed on a raster spanning the contour plus one
+    column of margin on each side that is not an image edge."""
+    h, w = image.shape
+    x, y = cnt[:, 0], cnt[:, 1]
+    x0, x1 = int(x.min()), int(x.max())
+    left, right = x0 > 0, x1 < w - 1
+    vals = image[y, x].astype(np.uint8, copy=False)
+    key = cuts = None
+    if max(h, x1 - x0) <= _INT16_MAX:  # larger words are computed, not stored
+        rel = np.empty(cnt.shape, np.int16)
+        rel[:, 0] = x - x0
+        rel[:, 1] = y
+        key = (h, baseline_org, left, right, rel.tobytes(), vals.tobytes())
+        cuts = CONTOUR_MEMO.get(key)
+    if cuts is None:
+        rx = x - (x0 - left)
+        img_cnt = np.zeros((h, x1 - x0 + 1 + left + right), np.uint8)
+        img_cnt[y, rx] = vals
+        cuts = _contour_cuts(img_cnt, rx, y, baseline_org)
+        if key is not None:
+            CONTOUR_MEMO.put(key, cuts, len(key[4]) + len(key[5]))
+    return [c + x0 - left for c in cuts]
+
+
+def _contour_cuts(img_cnt: np.ndarray, x_arr: np.ndarray, y_arr: np.ndarray, baseline_org: int,
+                  templates: list[TemplateSpec] | None = None) -> list:
+    """One contour's cuts in `img_cnt`'s x coordinates: its leftmost x,
+    template cut-after positions, then the baseline-run segment points.
+    img_cnt holds the image values at the contour points (x_arr, y_arr)
+    and zero elsewhere; template whitening edits it in place."""
+    # leftmost point's x (first minimum in point order)
+    cuts = [int(x_arr[int(np.argmin(x_arr))])]
+
+    baseline = int(most_frequent(y_arr))
+
+    # template suppression: all matches computed on the pristine raster,
+    # then whitening / extra cuts applied
+    matches = [(spec, *template_match_points(img_cnt, spec.image, spec.threshold)) for spec in templates or ()]
+    for spec, points, width in matches:
+        if spec.action == "whiten":
+            for p in points:
+                img_cnt[:, p:p + width] = 255
+        elif spec.action == "whiten_inset":
+            for p in points:
+                img_cnt[:, p + 3:p + width - 5] = 255
+        elif spec.action == "cut_after":
+            for p in points:
+                cuts.append(p + width)
+
+    # runs of >2 consecutive contour points with y in [baseline-1,
+    # baseline+2] — vectorized run detection; a run still open at the
+    # end of the point list is dropped, as in the reference's scan
+    near = (
+        (y_arr == baseline) | (y_arr == baseline - 1)
+        | (y_arr == baseline + 1) | (y_arr == baseline + 2)
+    ).astype(np.int8)
+    dn = np.empty(near.shape, dtype=np.int8)
+    dn[0] = near[0]
+    np.subtract(near[1:], near[:-1], out=dn[1:])
+    run_starts = np.flatnonzero(dn == 1)
+    run_ends = np.flatnonzero(dn == -1)  # exclusive; unterminated run dropped
+    run_starts = run_starts[: len(run_ends)]
+    keep = (run_ends - run_starts) > 2
+    point_positions = run_ends[keep]
+    length_consective = (run_ends - run_starts)[keep]
+
+    segment_points: list[int] = []
+    baseline_local = baseline
+    if abs(baseline - baseline_org) > 2:
+        baseline_local = baseline_org
+
+    above = img_cnt[int(baseline_local / 2):baseline_local - 1, :]
+    below = img_cnt[baseline_local + 2:, :]
+    col_clear = ~np.logical_or((above == 255).any(axis=0), (below == 255).any(axis=0))
+    for i, ln in zip(point_positions.tolist(), length_consective.tolist()):
+        sub_x = x_arr[i - ln:i]
+        candidates = sub_x[col_clear[sub_x]]
+        if len(candidates):
+            segment_points.append(int(candidates[len(candidates) // 2]))
+
+    if len(segment_points) < 1:
+        return cuts
+
+    segment_points.sort()
+    delete_point = False
+    for i in range(1, len(segment_points)):
+        if (img_cnt[:baseline - 1, segment_points[i - 1]:segment_points[i]] == 0).all():
+            delete_point = True
+            segment_points[i - 1] = -1
+    if delete_point:
+        segment_points.remove(-1)  # only the first -1, as in the reference
+
+    if len(segment_points) > 1:
+        next_last_seg_point = segment_points[1]
+    else:
+        next_last_seg_point = img_cnt.shape[1]
+    last_seg_point = segment_points[0]
+    last_seg_hp = horizontal_projection(img_cnt[:baseline, last_seg_point:next_last_seg_point])
+    first_non_zero_index = int((last_seg_hp != 0).argmax())
+
+    # the drawn/thickened contour, built only here: the trailing-glyph
+    # heuristic is its sole consumer and most contours exit earlier
+    cnt_mask = np.zeros(img_cnt.shape, dtype=bool)
+    cnt_mask[y_arr, x_arr] = True
+    img_drawn = _plus_dilate(cnt_mask)
+
+    if (
+        (first_non_zero_index / last_seg_hp.shape[0]) < 0.85
+        and (last_seg_hp[first_non_zero_index:] != 0).all()
+        and (img_drawn[baseline - 1:baseline + 2, 0:last_seg_point]).any()
+        and not (img_drawn[0:baseline - 2, 0:last_seg_point]).any()
+        and not (img_drawn[baseline + 3:, 0:last_seg_point]).any()
+    ):
+        segment_points = segment_points[1:]  # trailing open glyph: drop first cut
+
+    cuts.extend(p for p in segment_points if p != -1)
+    return cuts

@@ -57,6 +57,8 @@ def resolve_bucket_cap(max_bucket_size: int | str | None,
                 f"max_bucket_size must be an int, None, or the string 'auto'; "
                 f"got {max_bucket_size!r}"
             )
+        if n_rows is None and source is None:
+            raise ValueError("auto cap needs source or n_rows")
         n = n_rows if n_rows is not None else source.count()
         return auto_bucket_cap(n)
     return int(max_bucket_size)

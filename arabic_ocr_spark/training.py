@@ -22,7 +22,7 @@ import numpy as np
 
 from .kernel.classifier import CharModel
 from .kernel.features import batch_get_feat_vectors
-from .kernel.pipeline import iter_words
+from .kernel.pipeline import iter_words, page_lines
 from .sources.glyphs import _GLYPH_DEFS, compose_text_image  # noqa: F401
 
 __all__ = ["validations_for", "validate_fv", "compare_and_assign", "train_serial", "build_model"]
@@ -130,7 +130,7 @@ def _train_one_page(img, gt_words: list[str], char_map: dict, skip_deskew: bool)
     rejected = total = 0
     wi = 0
     try:
-        for word_img, cuts, _li in iter_words(img, skip_deskew=skip_deskew):
+        for word_img, cuts, _li in iter_words(page_lines(img, skip_deskew)):
             fvs = batch_get_feat_vectors(word_img, cuts)
             total += 1
             if wi >= len(gt_words):
@@ -215,13 +215,13 @@ def train_spark(spark, pages: list[list[str]], out_path: str | None = None) -> C
     sc = spark.sparkContext
 
     def emit(ipage):
-        pidx, page_lines = ipage
-        gt_words = [w for ln in page_lines for w in ln.split()]
-        img, _ = compose_text_image(page_lines)
+        pidx, text_lines = ipage
+        gt_words = [w for ln in text_lines for w in ln.split()]
+        img, _ = compose_text_image(text_lines)
         wi = 0
         out = []
         # full inference path (deskew on) — must match train_serial exactly
-        for word_img, cuts, _li in iter_words(img, skip_deskew=False):
+        for word_img, cuts, _li in iter_words(page_lines(img, skip_deskew=False)):
             fvs = batch_get_feat_vectors(word_img, cuts)
             if wi < len(gt_words):
                 word = gt_words[wi]

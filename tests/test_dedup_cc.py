@@ -117,3 +117,10 @@ def test_resolve_bucket_cap_validates_strings():
     for bad in ("AUTO", "Auto", "64", ""):
         with _pytest.raises(ValueError, match="auto"):
             resolve_bucket_cap(bad, n_rows=100)
+
+
+def test_resolve_bucket_cap_auto_needs_a_size():
+    from arabic_ocr_spark.operators.dedup import resolve_bucket_cap
+
+    with pytest.raises(ValueError, match="auto cap needs source or n_rows"):
+        resolve_bucket_cap("auto")

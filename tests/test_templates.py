@@ -59,6 +59,28 @@ def test_whiten_inset_action_runs():
     assert cuts == sorted(cuts)
 
 
+def test_iter_words_passes_templates_to_contour_seg():
+    """Training and the glyph harness segment through the same word loop
+    as extraction, templates included."""
+    from arabic_ocr_spark.kernel.contours import find_external_contours
+    from arabic_ocr_spark.kernel.pipeline import iter_words, page_lines
+    from arabic_ocr_spark.sources.glyphs import compose_text_image
+
+    img, _ = compose_text_image(["abc def"])
+    lines = page_lines(img, skip_deskew=True)
+    plain = list(iter_words(lines))
+    word = plain[0][0]
+    # a cut-after template cut from the word's largest contour raster
+    cnt = max(find_external_contours(word), key=len)
+    raster = np.zeros(word.shape, np.uint8)
+    raster[cnt[:, 1], cnt[:, 0]] = 255
+    x0 = int(cnt[:, 0].min())
+    spec = TemplateSpec("first", raster[:, x0:x0 + 5], threshold=0.99, action="cut_after")
+    templated = list(iter_words(lines, [spec]))
+    assert len(templated) == len(plain)
+    assert [c for _w, c, _l in templated][0] == sorted(plain[0][1] + [x0 + 5])
+
+
 def test_reference_template_table_pinned():
     """The reference's exact (name, threshold, action) tuning table
     (preprocess.py:329-394) is preserved as data and binds to any

@@ -12,7 +12,7 @@ import sys
 
 sys.path.insert(0, ".")
 from arabic_ocr_spark.sources.glyphs import ALPHABET, compose_text_image  # noqa: E402
-from arabic_ocr_spark.kernel.pipeline import iter_words  # noqa: E402
+from arabic_ocr_spark.kernel.pipeline import iter_words, page_lines  # noqa: E402
 from arabic_ocr_spark.kernel.features import batch_get_feat_vectors  # noqa: E402
 
 
@@ -30,7 +30,7 @@ def main() -> int:
         img, _exp = compose_text_image(lines)
         wi = 0
         try:
-            for w, cuts, _li in iter_words(img, skip_deskew=True):
+            for w, cuts, _li in iter_words(page_lines(img, skip_deskew=True)):
                 fvs = batch_get_feat_vectors(w, cuts)
                 word = gt[wi]
                 wi += 1
