@@ -4,11 +4,10 @@
   table synthesized next to sf0.001 (pool-rendered glyph payloads).
 - ``queries()``: one entry per implemented operator (SURVEY.md §2 + the
   training-data pipeline operators).  Rows-only (no oracle) is exactly the
-  irreducible five — the OCR-kernel trio (not SQL-expressible; gated by
-  per-turn equality vs the serial kernel) and the IVF pair (trained
-  quantizer + the recall row built on it); every other query, including
-  both LSH candidate stages, the full LSH top-k, and the LSH recall
-  number itself, has a DuckDB value-parity oracle.
+  OCR-kernel trio (not SQL-expressible; gated by per-turn equality vs the
+  serial kernel); every other query, including both LSH candidate
+  stages, the full LSH top-k, and the LSH recall number itself, has a
+  DuckDB value-parity oracle.
 - ``oracle_sql()``: ANSI-SQL twins, value-identical by construction
   (portable primitives only: md5, regexp on explicit classes, list
   comprehensions, round-to-fixed-decimals).
@@ -44,7 +43,6 @@ from arabic_ocr_spark.operators.similarity import (
     embedding_dup_pairs,
     embedding_neardup_candidates,
     embedding_neardup_hi,
-    ivf_ann_topk,
     lsh_ann_candidates,
     lsh_ann_topk,
     neardup_band_params,
@@ -248,12 +246,10 @@ _ANN_CACHE: dict[tuple[str, str], dict] = {}
 
 def _ann_chain(spark: SparkSession, sf_dir: str, stage: str) -> DataFrame:
     """The ANN suite shares its materialized stages the way the dedup
-    ladder does: the exact cosine baseline, the IVF top-k and the LSH top-k
-    each persist once per (session, sf_dir); the top-k driver queries and
-    the ann_recall measurement consume the SAME results (pre-r4 ann_recall
-    re-derived the whole suite from scratch, so the bench paid the ANN
-    queries twice).  Values are identical either way — recall is a join
-    over the same outputs."""
+    ladder does: the exact cosine baseline and the LSH top-k each persist
+    once per (session, sf_dir); the top-k driver queries and the
+    ann_lsh_recall measurement consume the SAME results.  Values are
+    identical either way — recall is a join over the same outputs."""
     key = (spark.sparkContext.applicationId, sf_dir)
     _evict_cache(_ANN_CACHE, key)
     cache = _ANN_CACHE.setdefault(key, {})
@@ -261,8 +257,6 @@ def _ann_chain(spark: SparkSession, sf_dir: str, stage: str) -> DataFrame:
         emb = _t(spark, sf_dir, "embeddings")
         if stage == "exact":
             cache[stage] = cosine_topk(emb).persist()
-        elif stage == "ivf":
-            cache[stage] = ivf_ann_topk(emb).persist()
         else:
             cache[stage] = lsh_ann_topk(emb).persist()
     return cache[stage]
@@ -452,36 +446,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["payload_profile"] = _q_payload_profile
     q["ann_lsh_topk"] = lambda s, d: _ann_chain(s, d, "lsh").withColumn(
         "rank", F.col("rank").cast("long"))
-    q["ann_ivf_topk"] = lambda s, d: _ann_chain(s, d, "ivf").withColumn(
-        "rank", F.col("rank").cast("long"))
     # the DETERMINISTIC candidate stage of ann_lsh_topk, oracle-gated: the
     # DuckDB twin replays the seeded Gaussian planes as SQL literals and the
     # same sign-of-projection bucketing (see _sql_lsh_ann_candidates)
     q["ann_lsh_candidates"] = lambda s, d: lsh_ann_candidates(_t(s, d, "embeddings"))
-    q["ann_recall"] = lambda s, d: ann_recall(
+    # LSH recall@10 vs the exact baseline, value-gated: both top-k sets are
+    # deterministic functions of (seed, corpus), so the DuckDB twin
+    # recomputes the recall from scratch (see _sql_lsh_ann_recall)
+    q["ann_lsh_recall"] = lambda s, d: ann_recall(
         _t(s, d, "embeddings"),
         exact=_ann_chain(s, d, "exact"),
-        ivf=_ann_chain(s, d, "ivf"),
         lsh=_ann_chain(s, d, "lsh"),
     )
-
-    def _q_ann_lsh_recall(s, d):
-        """LSH recall@10 vs the exact baseline as a VALUE-GATED query: both
-        top-k sets are deterministic pure functions of (seed, corpus) — see
-        the ann_lsh_topk twin — so the recall itself is a replayable
-        constant the DuckDB oracle recomputes from scratch.  Only the IVF
-        side of ann_recall stays rows-only (trained quantizer)."""
-        exact = _ann_chain(s, d, "exact").select("query_id", "neighbor_id")
-        lsh = _ann_chain(s, d, "lsh").select(
-            "query_id", "neighbor_id").withColumn("hit", F.lit(1))
-        j = exact.join(lsh, ["query_id", "neighbor_id"], "left")
-        return j.agg(
-            F.count("*").cast("long").alias("n_exact"),
-            F.sum(F.coalesce("hit", F.lit(0))).cast("long").alias("n_hit"),
-            F.round(F.sum(F.coalesce("hit", F.lit(0))) / F.count("*"), 6).alias("lsh_recall"),
-        )
-
-    q["ann_lsh_recall"] = _q_ann_lsh_recall
 
     # oracle-backed operators
     q["dedup_exact"] = lambda s, d: exact_dup_groups(_t(s, d, "documents"))
@@ -628,10 +604,11 @@ def _sql_lsh_ann_cte(dim: int, n_queries: int = 5, n_planes: int = 4,
     Portability note: Spark computes the projections as one BLAS GEMM,
     DuckDB as sequential list_dot_product folds — different summation
     orders can disagree ONLY if a projection lands within float rounding of
-    0 (measured margin on the fixtures: min |projection| 1.3e-6 at sf0.01,
-    ~3e7 x the worst-case accumulated rounding error of a 64-term double
-    dot product), and the check is deterministic for a fixed
-    (seed, corpus), so green once is green always."""
+    0.  tests/test_similarity.py::test_lsh_projection_margin_on_fixtures
+    pins min |projection| > 1e-9 on every fixture present (smallest
+    1.3e-6, at sf0.01: ~3e7 x the worst-case accumulated rounding error of
+    a 64-term double dot product), and the check is deterministic for a
+    fixed (seed, corpus), so green once is green always."""
     import numpy as np
 
     planes = np.random.default_rng(seed).standard_normal((n_tables * n_planes, dim))
@@ -872,9 +849,8 @@ SELECT vec_a, vec_b, sim_r FROM (
         ).fetchone()[0]
         sql["ann_lsh_candidates"] = _sql_lsh_ann_candidates(int(dim))
         # the FULL LSH top-k is deterministic end-to-end (seeded candidates
-        # + exact cosine + deterministic tie-break), so it is value-gated —
-        # it leaves the rows-only set; only IVF (trained quantizer) and the
-        # recall measurement built on it remain rows-only
+        # + exact cosine + deterministic tie-break), so it and the recall
+        # built on it are value-gated
         sql["ann_lsh_topk"] = _sql_lsh_ann_topk(int(dim))
         sql["ann_lsh_recall"] = _sql_lsh_ann_recall(int(dim))
     sql["payload_meta"] = f"""

@@ -79,7 +79,6 @@ class ExtractionJobConfig:
     # the sandbox (no Iceberg runtime jar here).  Production DDL, catalog
     # config and the sandbox->catalog artifact mapping: docs/iceberg.md.
     iceberg_table: str | None = None
-    iceberg_lineage_table: str | None = None
     # optional golden table (conv_id, turn_idx, expected_text): when set,
     # each lineage row carries the chunk's extraction accuracy (the north
     # star's per-partition "extraction accuracy" metric)

@@ -64,19 +64,20 @@ def resolve_bucket_cap(max_bucket_size: int | str | None,
     return int(max_bucket_size)
 
 
-def bucket_audit(buckets: DataFrame, cap: int, id_col: str) -> DataFrame:
+def bucket_audit(buckets: DataFrame, cap: int | None, id_col: str) -> DataFrame:
     """One-row audit of the hot-bucket guard at `cap` over an
     (id, band, key) bucket table: bucket count, buckets above the cap, the
     largest bucket, and an UPPER BOUND on pairs the star guard drops
     (s*(s-1)/2 - (s-1) per hot bucket — an upper bound because a dropped
     pair re-surfaces through any other band bucket below the cap where the
-    two ids still collide)."""
+    two ids still collide).  cap=None is the unguarded join: the cap
+    column is NULL and no bucket is hot."""
     key_cols = [c for c in buckets.columns if c != id_col]
     sizes = buckets.groupBy(*key_cols).agg(F.count("*").alias("bsz"))
-    hot = F.col("bsz") > cap
+    hot = F.col("bsz") > cap if cap is not None else F.lit(False)
     dropped = (F.col("bsz") * (F.col("bsz") - 1)) / 2 - (F.col("bsz") - 1)
     return sizes.agg(
-        F.lit(int(cap)).alias("cap"),
+        F.lit(cap).cast("long").alias("cap"),
         F.count("*").alias("n_buckets"),
         F.coalesce(F.sum(hot.cast("long")), F.lit(0)).cast("long").alias("n_hot_buckets"),
         F.coalesce(F.max("bsz"), F.lit(0)).cast("long").alias("max_bucket"),
@@ -229,8 +230,7 @@ def lsh_bucket_audit(docs: DataFrame, k: int = 7, num_hashes: int = 8, band_size
     and alongside the guarded job in production — so a binding cap is a
     measured, inspected event rather than silent pair loss."""
     cap = resolve_bucket_cap(max_bucket_size, docs, n_rows)
-    return bucket_audit(_text_band_buckets(docs, k, num_hashes, band_size),
-                        cap if cap is not None else 2**62, "doc_id")
+    return bucket_audit(_text_band_buckets(docs, k, num_hashes, band_size), cap, "doc_id")
 
 
 def jaccard_verified_pairs(docs: DataFrame, k: int = 7, num_hashes: int = 8,

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from arabic_ocr_spark.operators.dedup import bucket_audit, resolve_bucket_cap
 
-__all__ = ["cosine_topk", "lsh_ann_topk", "lsh_ann_candidates", "ivf_ann_topk", "ann_recall",
+__all__ = ["cosine_topk", "lsh_ann_topk", "lsh_ann_candidates", "ann_recall",
            "embedding_dup_pairs", "embedding_neardup_candidates", "embedding_neardup_hi",
            "neardup_band_params", "neardup_bucket_audit"]
 
@@ -287,8 +287,7 @@ def neardup_bucket_audit(embeddings: DataFrame, n_bands: int = 16,
     measured, inspected event rather than silent pair loss."""
     vecs = embeddings.select("vec_id", _as_double("embedding").alias("v"))
     cap = resolve_bucket_cap(max_bucket_size, vecs, n_rows)
-    return bucket_audit(_band_buckets(vecs, n_bands, rows_per_band, seed),
-                        cap if cap is not None else 2**62, "vec_id")
+    return bucket_audit(_band_buckets(vecs, n_bands, rows_per_band, seed), cap, "vec_id")
 
 
 def neardup_band_params(n_rows: int, threshold: float = 0.95,
@@ -382,195 +381,34 @@ def embedding_neardup_hi(embeddings: DataFrame, threshold: float = 0.95,
     )
 
 
-def _train_ivf_centroids(vecs: DataFrame, n_centroids: int, iters: int):
-    """Distributed Lloyd iterations with cosine assignment over unit
-    vectors.  Returns the centroid matrix as a plain nested list.
-
-    Scale shape: the corpus is only ever scanned map-only per iteration —
-    the assignment UDF partially aggregates per Arrow batch (emitting
-    C x dim (cell, pos, sum, cnt) rows), so the per-iteration shuffle
-    carries O(C * dim * n_batches) tiny rows, never vectors.  Init is the
-    C corpus vectors with the smallest xxhash64(vec_id): deterministic,
-    seed-free, and a single top-C collect of C*dim doubles."""
-    import numpy as np
-    import pandas as pd
-
-    init_rows = (
-        vecs.withColumn("h", F.xxhash64("vec_id")).orderBy("h").limit(n_centroids).collect()
-    )
-    cent = np.asarray([np.asarray(r["v"], dtype=np.float64) for r in init_rows])
-    cent /= np.linalg.norm(cent, axis=1, keepdims=True)
-
-    for _ in range(iters):
-        frozen = cent  # capture this iteration's centroids in the closure
-
-        def partial_sums(batches, cent_m=frozen):
-            for pdf in batches:
-                X = np.asarray([np.asarray(x, dtype=np.float64) for x in pdf["v"]])
-                X = X / np.linalg.norm(X, axis=1, keepdims=True)
-                assign = np.argmax(X @ cent_m.T, axis=1)
-                cells, pos, sums, cnts = [], [], [], []
-                for c in np.unique(assign):
-                    members = X[assign == c]
-                    s = members.sum(axis=0)
-                    d = len(s)
-                    cells.extend([int(c)] * d)
-                    pos.extend(range(d))
-                    sums.extend(s.tolist())
-                    cnts.extend([len(members)] * d)
-                yield pd.DataFrame({"cell": cells, "pos": pos, "s": sums, "cnt": cnts})
-
-        agg = (
-            vecs.select("v")
-            .mapInPandas(partial_sums, "cell int, pos int, s double, cnt bigint")
-            .groupBy("cell", "pos")
-            .agg(F.sum("s").alias("s"), F.sum("cnt").alias("cnt"))
-            .collect()
-        )
-        new_cent = cent.copy()
-        by_cell: dict[int, list] = {}
-        for r in agg:
-            by_cell.setdefault(r["cell"], []).append(r)
-        for c, rows in by_cell.items():
-            mean = np.zeros(cent.shape[1])
-            for r in rows:
-                mean[r["pos"]] = r["s"] / r["cnt"]
-            nrm = np.linalg.norm(mean)
-            if nrm > 0:
-                new_cent[c] = mean / nrm
-        cent = new_cent
-    return cent.tolist()
-
-
-def ivf_ann_topk(embeddings: DataFrame, n_queries: int = 5, k: int = 10,
-                 n_centroids: int = 32, n_assign: int = 3, nprobe: int = 8,
-                 kmeans_iters: int = 5) -> DataFrame:
-    """IVF approximate top-k: a coarse k-means quantizer buckets the corpus
-    (each vector indexed under its n_assign nearest centroids); a query
-    probes its nprobe nearest cells and ranks candidates by exact cosine.
-    Same output shape as cosine_topk.
-
-    Data-adaptive where hyperplane LSH is not: on weakly-clustered/isotropic
-    embeddings random hyperplanes separate true neighbours with probability
-    ~theta/pi per bit, while learned centroids track the actual density.
-    Multi-assignment (n_assign > 1) trades index size for recall — the
-    standard IVF recall knob.  Defaults are calibrated on the synthetic
-    fixture to recall@10 >= 0.8 vs cosine_topk (measured by ann_recall);
-    real embedding corpora with genuine cluster structure prune far harder
-    at the same settings.
-
-    Scale: centroid training is map-only scans + tiny shuffles
-    (see _train_ivf_centroids); the index pass is one map-only GEMM over
-    the corpus; candidate generation joins the C-cell index against the
-    broadcast query probes; only candidates (a cell-bounded fraction of the
-    corpus) reach the exact-cosine ranking."""
-    import numpy as np
-    import pandas as pd
-
-    vecs = embeddings.select("vec_id", _as_double("embedding").alias("v"))
-    cent = _train_ivf_centroids(vecs, n_centroids, kmeans_iters)
-
-    # the index and probe tables carry IDS ONLY: shipping the vectors
-    # through the cell join (duplicated n_assign x / nprobe x) would shuffle
-    # ~3x the corpus vector bytes at scale; instead the exact-cosine ranking
-    # re-joins vectors by id for just the surviving candidates — the same
-    # shape the near-dup verify stages use
-    def index_cells(batches, cent_list=cent, a=n_assign):
-        cent_m = np.asarray(cent_list)
-        for pdf in batches:
-            X = np.asarray([np.asarray(x, dtype=np.float64) for x in pdf["v"]])
-            Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
-            top = np.argsort(-(Xn @ cent_m.T), kind="stable", axis=1)[:, :a]
-            yield pd.DataFrame({
-                "vec_id": np.repeat(pdf["vec_id"].to_numpy(), a),
-                "cell": top.reshape(-1),
-            })
-
-    def probe_cells(batches, cent_list=cent, p=nprobe):
-        cent_m = np.asarray(cent_list)
-        for pdf in batches:
-            X = np.asarray([np.asarray(x, dtype=np.float64) for x in pdf["v"]])
-            Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
-            top = np.argsort(-(Xn @ cent_m.T), kind="stable", axis=1)[:, :p]
-            yield pd.DataFrame({
-                "query_id": np.repeat(pdf["vec_id"].to_numpy(), p),
-                "cell": top.reshape(-1),
-            })
-
-    indexed = vecs.mapInPandas(index_cells, "vec_id bigint, cell int")
-    probes = (
-        vecs.filter(F.col("vec_id") < n_queries)
-        .mapInPandas(probe_cells, "query_id bigint, cell int")
-    )
-    cand_ids = (
-        indexed.join(F.broadcast(probes), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
-        .dropDuplicates(["query_id", "neighbor_id"])  # multi-assign x multi-probe overlap
-    )
-    queries = vecs.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("q")
-    )
-    nbrs = vecs.select(F.col("vec_id").alias("neighbor_id"), "v")
-    sims = (
-        cand_ids.join(F.broadcast(queries), "query_id")
-        .join(nbrs, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(_cosine(F.col("q"), F.col("v")), 4).alias("sim_r"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim_r").desc(), F.col("neighbor_id").asc())
-    return sims.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
 def ann_recall(embeddings: DataFrame, n_queries: int = 5, k: int = 10,
-               exact: DataFrame | None = None, ivf: DataFrame | None = None,
-               lsh: DataFrame | None = None) -> DataFrame:
-    """Recall@k of the two ANN operators vs the exact cosine_topk baseline,
-    as one row (n_queries, ivf_recall, lsh_recall).  The measurement the
-    approximate operators are graded by.
+               exact: DataFrame | None = None, lsh: DataFrame | None = None) -> DataFrame:
+    """Recall@k of lsh_ann_topk vs the exact cosine_topk baseline, as one
+    row (n_exact, n_hit, lsh_recall): the exact top-k left-joined to the
+    LSH hits, recall rounded to 6 places.  Both top-k sets are
+    deterministic functions of (seed, corpus), so the row is a replayable
+    constant that the DuckDB twin (__spark_entry__._sql_lsh_ann_recall)
+    recomputes value for value.
 
-    exact/ivf/lsh optionally supply already-materialized top-k results
-    (cosine_topk / ivf_ann_topk / lsh_ann_topk output shape): a pipeline
-    that just RAN the ANN queries should measure the results it has, not
-    pay the whole suite a second time (the driver's _ann_chain cache does
-    exactly that).  The reported n_queries is derived from the exact
-    frame's ACTUAL distinct query set — a caller handing in frames built
-    with different parameters gets a correctly-labeled measurement, not
-    the parameter echoed back."""
-    # materialize the exact baseline once; both recall_of joins reuse it
-    # instead of recomputing the full exact top-k per measurement
+    exact/lsh optionally supply already-materialized top-k frames
+    (cosine_topk / lsh_ann_topk output shape): a pipeline that just ran the
+    top-k queries measures the results it has instead of paying for them
+    again (the driver's _ann_chain cache does exactly that).  Default
+    frames are sized by the n_queries parameter."""
     if exact is None:
         exact = cosine_topk(embeddings, n_queries, k)
-    exact = exact.select("query_id", "neighbor_id").localCheckpoint()
-    # denominator = the baseline's ACTUAL row count: on small corpora (or
-    # with ties filtered) the exact top-k yields fewer than n_queries*k
-    # neighbours, and a fixed denominator would understate even a perfect
-    # approximate result
-    n_exact = exact.count()
-    # REPORTED query count comes from the exact frame; the n_queries
-    # PARAMETER stays intact below because it still sizes the default
-    # ivf/lsh frames — overwriting it would build approximate frames over a
-    # smaller id range than the baseline on corpora with sparse vec_ids and
-    # wrongly deflate recall
-    n_queries_measured = exact.select("query_id").distinct().count()
-
-    def recall_of(approx: DataFrame):
-        if n_exact == 0:
-            return 1.0
-        return (exact.join(approx.select("query_id", "neighbor_id"),
-                           ["query_id", "neighbor_id"]).count()) / n_exact
-
-    if ivf is None:
-        ivf = ivf_ann_topk(embeddings, n_queries, k)
     if lsh is None:
         lsh = lsh_ann_topk(embeddings, n_queries, k)
-    spark = embeddings.sparkSession
-    return spark.createDataFrame(
-        [(n_queries_measured, float(recall_of(ivf)), float(recall_of(lsh)))],
-        "n_queries int, ivf_recall double, lsh_recall double",
+    hits = lsh.select("query_id", "neighbor_id").withColumn("hit", F.lit(1))
+    hit = F.sum(F.coalesce("hit", F.lit(0)))
+    return (
+        exact.select("query_id", "neighbor_id")
+        .join(hits, ["query_id", "neighbor_id"], "left")
+        .agg(
+            F.count("*").cast("long").alias("n_exact"),
+            F.coalesce(hit, F.lit(0)).cast("long").alias("n_hit"),
+            F.round(hit / F.count("*"), 6).alias("lsh_recall"),
+        )
     )
 
 
@@ -586,8 +424,8 @@ def lsh_ann_candidates(embeddings: DataFrame, n_queries: int = 5,
     stage is DuckDB-oracle-checked — the oracle replays the identical
     float64 planes as SQL literals and the identical sign rule over the
     same parquet floats (see __spark_entry__._sql_lsh_ann_candidates).
-    Only the top-k RANKING built on these candidates is approximate and
-    graded by measured recall instead."""
+    The top-k ranked over these candidates is approximate only in that it
+    can miss true neighbours; ann_recall measures how many."""
     vecs = embeddings.select("vec_id", _as_double("embedding").alias("v"))
     # table t = band t of the shared banding primitive (seeded planes)
     buckets = _band_buckets(vecs, n_tables, n_planes, seed=seed)
@@ -609,9 +447,11 @@ def lsh_ann_topk(embeddings: DataFrame, n_queries: int = 5, k: int = 10,
     independent `n_planes`-bit signature tables; a corpus vector is a
     candidate for a query if it shares the query's bucket in ANY table
     (OR-banding), then exact cosine ranks the candidates.  Same output shape
-    as cosine_topk (rows-only check: the bucketing is seed-stable — the
-    Gaussian planes are a pure function of the seed — and the approximation
-    is measured by ann_recall).
+    as cosine_topk.  The bucketing is seed-stable (the Gaussian planes are
+    a pure function of the seed), so the whole operator is a deterministic
+    function of (seed, corpus) and value-gated by its DuckDB twin
+    (__spark_entry__._sql_lsh_ann_topk); ann_recall measures what the
+    approximation misses.
 
     The single-table variant this replaces measured recall@10 = 0.18 on the
     isotropic fixture: one 4-bit bucket keeps only ~(1 - theta/pi)^4 of true
@@ -629,10 +469,9 @@ def lsh_ann_topk(embeddings: DataFrame, n_queries: int = 5, k: int = 10,
     cosine ~0.4 (p ~ 0.63/bit), so 0.98 recall costs a candidate fraction
     of ~1-(1-2^-4)^16 ~ 0.64 of the corpus — weak pruning is inherent to
     isotropic data, not to the operator (on clustered real corpora p for
-    true neighbours is far higher and the same banding prunes hard).  IVF
-    (ivf_ann_topk, recall ~0.9 at ~25% probe fraction) remains the
-    data-adaptive default; this is the model-free alternative that needs
-    no training pass."""
+    true neighbours is far higher and the same banding prunes hard).  It is
+    the engine's one approximate top-k: model-free, with no training
+    pass."""
     vecs = embeddings.select("vec_id", _as_double("embedding").alias("v"))
     cand_ids = lsh_ann_candidates(embeddings, n_queries, n_planes, n_tables)
     queries = vecs.filter(F.col("vec_id") < n_queries).select(

@@ -45,7 +45,7 @@ def _calibrate(ms: float = 600.0) -> float:
 CACHE_GROUPS = {
     "extraction_plan": ["extract_turns", "extract_eval", "extract_lineage"],
     "dedup_chain": ["minhash_lsh_pairs", "jaccard_pairs", "dedup_groups", "curated_docs"],
-    "ann_suite": ["cosine_topk", "ann_lsh_topk", "ann_ivf_topk", "ann_recall", "ann_lsh_recall"],
+    "ann_suite": ["cosine_topk", "ann_lsh_topk", "ann_lsh_recall"],
     "payload_profile": ["payload_features", "payload_ink", "payload_thumbnail", "payload_profile"],
 }
 
@@ -104,7 +104,6 @@ def main() -> None:
         "embedding_neardup_hi",
         "ann_lsh_candidates",
         "ann_lsh_topk",
-        "ann_ivf_topk",
         "payload_thumbnail",
         "payload_profile",
         "pricing_summary",
@@ -126,13 +125,10 @@ def main() -> None:
             extract_sec = dt
         print(f"# {name}: {n} rows in {dt:.2f}s", file=sys.stderr)
 
-    # ANN quality metric + its wall time: recall@10 vs exact cosine_topk
+    # ANN quality metric + its wall time: LSH recall@10 vs exact
+    # cosine_topk (reads the same materialized suite)
     t0 = time.perf_counter()
-    recall_row = qs["ann_recall"](spark, sf_dir).collect()[0]
-    timings["ann_recall"] = round(time.perf_counter() - t0, 3)
-    # the value-gated LSH recall twin (reads the same materialized suite)
-    t0 = time.perf_counter()
-    qs["ann_lsh_recall"](spark, sf_dir).count()
+    recall_row = qs["ann_lsh_recall"](spark, sf_dir).collect()[0]
     timings["ann_lsh_recall"] = round(time.perf_counter() - t0, 3)
 
     # high-threshold near-dup pruning evidence: LSH-band candidate volume vs
@@ -174,7 +170,6 @@ def main() -> None:
         "cpus": cpus,
         "extract_turns": n_turns,
         "extract_turns_per_sec": round(n_turns / extract_sec, 1) if extract_sec else None,
-        "ann_ivf_recall_at_10": recall_row["ivf_recall"],
         "ann_lsh_recall_at_10": recall_row["lsh_recall"],
         "neardup_hi_candidates": neardup_cands,
         "neardup_hi_allpairs": n_aug * (n_aug - 1) // 2,

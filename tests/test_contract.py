@@ -6,14 +6,10 @@ import __spark_entry__ as entry
 
 # the ONLY queries allowed to lack a DuckDB oracle: the OCR-kernel trio
 # (not SQL-expressible; gated instead by per-turn equality vs the serial
-# kernel in tests/test_spark_job.py) and the IVF pair (a TRAINED quantizer
-# — k-means is not SQL-expressible — plus the recall measurement built on
-# it).  ann_lsh_topk left this set in round 5: seeded candidates + exact
-# cosine + deterministic tie-break make it value-gateable end-to-end.
-IRREDUCIBLE_ROWS_ONLY = {
-    "extract_turns", "extract_eval", "extract_lineage",
-    "ann_ivf_topk", "ann_recall",
-}
+# kernel in tests/test_spark_job.py).  The ANN suite is value-gated
+# end-to-end: seeded LSH candidates + exact cosine + deterministic
+# tie-break, and the recall row built on them.
+IRREDUCIBLE_ROWS_ONLY = {"extract_turns", "extract_eval", "extract_lineage"}
 
 
 def test_every_oracle_has_a_query():

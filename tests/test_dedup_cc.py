@@ -89,6 +89,12 @@ def test_lsh_auto_guard_binds_only_on_degenerate_buckets(spark):
     assert audit.max_bucket == m
     assert audit.dropped_pairs_ubound == 4 * (m * (m - 1) // 2 - (m - 1))
 
+    # the unguarded join has no cap: NULL, and nothing is hot or dropped
+    unguarded = lsh_bucket_audit(docs, max_bucket_size=None).collect()[0]
+    assert unguarded.cap is None
+    assert unguarded.n_hot_buckets == 0 and unguarded.dropped_pairs_ubound == 0
+    assert unguarded.n_buckets == audit.n_buckets and unguarded.max_bucket == m
+
 
 def test_lsh_auto_guard_is_nonbinding_on_fixture(spark):
     """At the gated scales natural buckets sit far below ceil(8*sqrt(n)), so

@@ -136,22 +136,3 @@ def test_quality_gate_sits_below_kernel(spark, entry_mod):
     gate = [p for p in filters if maps[0] < p < maps[1]]
     assert gate and all(p > exchanges[0] for p in gate)
     assert "quality_ok" in plan  # expression details live outside the tree section
-
-
-def test_ivf_candidate_join_carries_ids_not_vectors(spark):
-    """The IVF index/probe cell join must ship (id, cell) rows only — the
-    vectors re-join by id at the exact-cosine ranking stage.  Shipping
-    vectors through the cell join (duplicated n_assign x) would shuffle ~3x
-    the corpus vector bytes at scale."""
-    from arabic_ocr_spark.operators.similarity import ivf_ann_topk
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    plan = ivf_ann_topk(emb)._jdf.queryExecution().executedPlan().toString()
-    # node shape: MapInPandas index_cells(vec_id#0L, v#3)#112, [vec_id#113L, cell#114], ...
-    # the [..] AFTER the call is the UDF's OUTPUT schema: ids and cells only,
-    # never the vector columns (v/q), which the UDF may consume but not emit
-    outs = re.findall(r"MapInPandas (?:index_cells|probe_cells)\([^)]*\)#\d+, \[([^\]]*)\]", plan)
-    assert len(outs) == 2, plan
-    for out in outs:
-        names = {a.strip().split("#")[0] for a in out.split(",")}
-        assert names <= {"vec_id", "query_id", "cell"}, out

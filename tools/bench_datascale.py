@@ -105,7 +105,7 @@ def main() -> None:
     from arabic_ocr_spark.operators.similarity import (
         embedding_neardup_candidates,
         embedding_neardup_hi,
-        ivf_ann_topk,
+        lsh_ann_topk,
         neardup_band_params,
     )
     from arabic_ocr_spark.session import get_spark
@@ -133,7 +133,7 @@ def main() -> None:
             "dedup_groups": lambda: dedup_groups(docs, n_rows=n_docs),
             "embedding_neardup_hi": lambda: embedding_neardup_hi(emb, n_rows=n_vecs),
             "neardup_candidates": lambda: embedding_neardup_candidates(emb, nb, rpb, n_rows=n_vecs),
-            "ann_ivf_topk": lambda: ivf_ann_topk(emb),
+            "ann_lsh_topk": lambda: lsh_ann_topk(emb),
         }
         out = {}
         for name, fn in queries.items():

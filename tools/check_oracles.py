@@ -32,16 +32,14 @@ def norm_rows(cols, rows):
     return sorted(cols), sorted(out, key=lambda t: tuple(str(x) for x in t))
 
 
-def main() -> int:
+def check(spark, sf_dir: str, only=()) -> list[str]:
+    """Run every queries() entry (or just those named in `only`) on Spark
+    and its oracle twin on DuckDB over `sf_dir`; print one line per query
+    and return the lines of the ones that failed."""
     import duckdb
 
     import __spark_entry__ as entry
-    from arabic_ocr_spark.session import get_spark
 
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    only = set(sys.argv[2:])
-
-    spark = get_spark(master="local[4]", shuffle_partitions=8)
     con = duckdb.connect()
     for t in "region nation customer supplier part orders lineitem events documents embeddings".split():
         p = os.path.join(sf_dir, f"{t}.parquet")
@@ -52,7 +50,12 @@ def main() -> int:
     # payload oracles read the synth transcripts by path: pass THIS sf_dir
     # explicitly so they don't fall back to the driver default (sf0.01)
     oracles = entry.oracle_sql(sf_dir)
-    failures = 0
+    failures: list[str] = []
+
+    def fail(line: str) -> None:
+        failures.append(line)
+        print(line)
+
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -61,41 +64,46 @@ def main() -> int:
                 n = fn(spark, sf_dir).count()
                 print(f"[rows-only] {name}: {n} rows")
             except Exception as e:  # noqa: BLE001
-                failures += 1
-                print(f"[rows-only] {name}: ERROR {type(e).__name__}: {e}")
+                fail(f"[rows-only] {name}: ERROR {type(e).__name__}: {e}")
             continue
         try:
             sdf = fn(spark, sf_dir)
             scols = sdf.columns
             srows = [tuple(r) for r in sdf.collect()]
         except Exception as e:  # noqa: BLE001
-            failures += 1
-            print(f"[spark] {name}: ERROR {type(e).__name__}: {str(e)[:200]}")
+            fail(f"[spark] {name}: ERROR {type(e).__name__}: {str(e)[:200]}")
             continue
         try:
             res = con.execute(oracles[name])
             ocols = [d[0] for d in res.description]
             orows = res.fetchall()
         except Exception as e:  # noqa: BLE001
-            failures += 1
-            print(f"[duckdb] {name}: ERROR {type(e).__name__}: {str(e)[:200]}")
+            fail(f"[duckdb] {name}: ERROR {type(e).__name__}: {str(e)[:200]}")
             continue
         sc, sr = norm_rows(scols, srows)
         oc, orr = norm_rows(ocols, orows)
         if sc != oc:
-            failures += 1
-            print(f"[FAIL cols] {name}: spark={sc} duckdb={oc}")
+            fail(f"[FAIL cols] {name}: spark={sc} duckdb={oc}")
             continue
         if len(sr) != len(orr):
-            failures += 1
-            print(f"[FAIL rows] {name}: spark={len(sr)} duckdb={len(orr)}")
+            fail(f"[FAIL rows] {name}: spark={len(sr)} duckdb={len(orr)}")
             continue
         if sr != orr:
-            failures += 1
             bad = [(a, b) for a, b in zip(sr, orr) if a != b][:3]
-            print(f"[FAIL vals] {name}: first diffs: {bad}")
+            fail(f"[FAIL vals] {name}: first diffs: {bad}")
             continue
         print(f"[OK] {name}: {len(sr)} rows match")
+    return failures
+
+
+def main() -> int:
+    from arabic_ocr_spark.session import get_spark
+
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
+    only = set(sys.argv[2:])
+
+    spark = get_spark(master="local[4]", shuffle_partitions=8)
+    failures = check(spark, sf_dir, only)
     spark.stop()
     return 1 if failures else 0
 
