@@ -15,13 +15,17 @@ re-expressed as a DataFrame program, reference segment_words.py:234-277):
     each partition (the north rule's ordering guarantee)
  -> mapInPandas(extract kernel): Arrow batches in, NumPy per payload,
     classifier weights + templates broadcast ONCE per executor
- -> checkpointed write: chunks are grouped into WAVES; each wave commits
-    its data directory atomically (parquet _SUCCESS; Iceberg snapshot on a
-    real catalog) and then appends its lineage rows (chunk, turn range,
-    rows, failures, wall time).  A killed run resumes by reading the
+ -> checkpointed write: chunks are grouped into WAVES; `commit_unit` is
+    the one commit order, shared with the streaming sink: the data
+    directory (parquet _SUCCESS), then the optional Iceberg snapshot, then
+    the lineage rows (chunk, turn range, rows, failures, wall time) read
+    back from the committed files.  A killed run resumes by reading the
     lineage table and recomputing only waves without lineage; a wave whose
     data committed but whose lineage write was lost is overwritten
     idempotently (deterministic wave -> path mapping).
+
+A staged input (`stage_chunked`) is recognised by its `chunk` column,
+which the transcripts schema lacks: its chunk is read, not recomputed.
 
 At 100 TB: C is sized so a chunk's payload bytes fit one task comfortably
 (e.g. 2-8 GB/chunk -> C in the tens of thousands), waves bound the blast
@@ -35,7 +39,6 @@ import glob
 import json
 import math
 import os
-import shutil
 import time
 from collections.abc import Iterator
 from dataclasses import dataclass
@@ -48,7 +51,8 @@ from .kernel.segmentation import TemplateSpec
 from .sources.codec import decode_payload
 
 __all__ = ["ExtractionJobConfig", "derive_salt_buckets", "plan_extraction",
-           "stage_chunked", "run_extraction", "read_lineage", "lineage_rows"]
+           "stage_chunked", "run_extraction", "read_lineage", "lineage_rows",
+           "commit_unit"]
 
 RESULT_SCHEMA = (
     "conv_id string, turn_idx int, chunk int, part_id int, extracted_text string, "
@@ -71,7 +75,6 @@ class ExtractionJobConfig:
     salt_buckets: int | None = 16
     model_path: str | None = None
     payload_roles: tuple = ()       # optional role filter pushed into the scan
-    require_payload: bool = True    # filter text != '' at the scan
     # Iceberg output (production): when set and an Iceberg catalog is on the
     # classpath, each wave commits via writeTo(table).overwritePartitions()
     # with the wave as a partition column — an atomic snapshot per wave, the
@@ -91,8 +94,6 @@ class ExtractionJobConfig:
     # work on the dropped fraction.  Default off: a clean corpus only pays
     # the extra decode.
     quality_filter: bool = False
-    quality_min_ink: float = 0.005
-    quality_max_ink: float = 0.5
     # dedup-before-compute: extract each DISTINCT payload once and join the
     # result back to the turns.  Real transcript corpora repeat payloads
     # (retries, quoted/forwarded documents); when the duplication factor is
@@ -186,15 +187,19 @@ def _make_kernel(model_bc, templates_bc, passthrough_col: str | None = None):
 
 def plan_extraction(spark, df, cfg: ExtractionJobConfig, model: CharModel | None = None,
                     templates: list[TemplateSpec] | None = None, wave: int | None = None,
-                    model_bc=None, templates_bc=None, prechunked: bool = False):
+                    model_bc=None, templates_bc=None):
     """Builds the extraction DataFrame (no side effects; one shuffle).
 
+    df: the transcripts, or a staged frame (`stage_chunked`), recognised by
+    its `chunk` column: the chunk is then read, not recomputed.
+
     wave: restrict the plan to one checkpoint wave.  The predicate is on the
-    PRE-kernel salted chunk column (`pmod(chunk, num_waves) == wave`), so it
-    prunes before the repartition — a wave scans, shuffles, and extracts only
-    its own 1/num_waves of the input.  (Filtering the kernel OUTPUT instead
-    would re-run the opaque mapInPandas kernel over everything per wave:
-    Catalyst cannot push a predicate through it.)
+    PRE-kernel salted chunk column (`pmod(chunk, num_waves) == wave`; on a
+    staged frame, its `wave` partition column), so it prunes before the
+    repartition — a wave scans, shuffles, and extracts only its own
+    1/num_waves of the input.  (Filtering the kernel OUTPUT instead would
+    re-run the opaque mapInPandas kernel over everything per wave: Catalyst
+    cannot push a predicate through it.)
 
     model_bc / templates_bc: pre-created broadcast handles, so callers that
     build many plans per session (the wave loop, streaming foreachBatch)
@@ -202,48 +207,28 @@ def plan_extraction(spark, df, cfg: ExtractionJobConfig, model: CharModel | None
     """
     from pyspark.sql import functions as F
 
+    if cfg.payload_roles:
+        # a frame without the column (a role-less source or staged layout)
+        # raises rather than silently extracting every role
+        if "role" not in df.columns:
+            raise ValueError(
+                "payload_roles is set but the input has no 'role' column; "
+                "use a role-bearing source (and re-run stage_chunked on it)"
+            )
+        df = df.filter(F.col("role").isin(*cfg.payload_roles))
+
     if model_bc is None:
         model = model or CharModel.load(cfg.model_path)
         model_bc = spark.sparkContext.broadcast(model)
     if templates_bc is None:
         templates_bc = spark.sparkContext.broadcast(templates or [])
 
-    if prechunked:
-        # staged input (stage_chunked): the salted chunk column is already
-        # materialized and the caller's read was partition-pruned to the
-        # wave — no hashing, no wave filter.  The role filter still applies
-        # here: stage_chunked carries `role` through the staged layout
-        # precisely so a role-restricted run over a staged directory is not
-        # a silent no-op (a pre-r3 staged layout without the column raises
-        # rather than extracting every role)
-        base = df
-        if cfg.payload_roles:
-            if "role" not in base.columns:
-                raise ValueError(
-                    "payload_roles is set but the staged input has no 'role' "
-                    "column; re-run stage_chunked on a role-bearing source"
-                )
-            base = base.filter(F.col("role").isin(*cfg.payload_roles))
-        salted = base.select("conv_id", "turn_idx", "text", "chunk")
-    else:
-        cols = df.select("conv_id", "turn_idx", "text")
-        if cfg.payload_roles:
-            cols = df.filter(F.col("role").isin(*cfg.payload_roles)).select("conv_id", "turn_idx", "text")
-
-        salt_buckets = cfg.salt_buckets
-        if salt_buckets is None:
-            salt_buckets = derive_salt_buckets(cols, cfg.num_chunks)
-            cfg.salt_buckets = salt_buckets  # pin: every wave must salt identically
-
-        salted = cols.withColumn(
-            "chunk",
-            F.pmod(
-                F.xxhash64(F.col("conv_id"), F.pmod(F.xxhash64(F.col("turn_idx")), F.lit(salt_buckets))),
-                F.lit(cfg.num_chunks),
-            ).cast("int"),
-        )
-        if wave is not None:
-            salted = salted.filter(_wave_of(F.col("chunk"), cfg.num_waves) == wave)
+    if "chunk" not in df.columns:
+        df = _with_chunk(df.select("conv_id", "turn_idx", "text"), cfg)
+    if wave is not None:
+        in_wave = F.col("wave") if "wave" in df.columns else _wave_of(F.col("chunk"), cfg.num_waves)
+        df = df.filter(in_wave == wave)
+    salted = df.select("conv_id", "turn_idx", "text", "chunk")
     gate = None
     if cfg.quality_filter:
         # pre-kernel gate (operators/multimodal.with_quality_flag): drops
@@ -252,7 +237,7 @@ def plan_extraction(spark, df, cfg: ExtractionJobConfig, model: CharModel | None
 
         def gate(d):
             return (
-                with_quality_flag(d, cfg.quality_min_ink, cfg.quality_max_ink)
+                with_quality_flag(d)
                 .filter(F.col("quality_ok"))
                 .drop("quality_ok")
             )
@@ -313,6 +298,20 @@ def _wave_of(chunk_col, num_waves: int):
     return F.pmod(chunk_col, F.lit(num_waves)).cast("int")
 
 
+def _with_chunk(df, cfg: ExtractionJobConfig):
+    """The ONE salted chunk rule:
+    chunk = pmod(xxhash64(conv_id, pmod(xxhash64(turn_idx), S)), C).
+    salt_buckets=None derives S from df and pins it on cfg for later waves."""
+    from pyspark.sql import functions as F
+
+    if cfg.salt_buckets is None:
+        cfg.salt_buckets = derive_salt_buckets(df, cfg.num_chunks)
+    salt = F.pmod(F.xxhash64(F.col("turn_idx")), F.lit(cfg.salt_buckets))
+    return df.withColumn(
+        "chunk", F.pmod(F.xxhash64(F.col("conv_id"), salt), F.lit(cfg.num_chunks)).cast("int")
+    )
+
+
 def stage_chunked(spark, df, cfg: ExtractionJobConfig, staged_dir: str) -> str:
     """ONE pass over the raw input writing it re-laid-out as
     `staged_dir/wave=<w>/` partitions with the salted chunk column
@@ -322,43 +321,58 @@ def stage_chunked(spark, df, cfg: ExtractionJobConfig, staged_dir: str) -> str:
     relative to the OCR kernel at small wave counts, but W full scans at
     W=64 on 100 TB is real money.  Staging costs one scan + one write, and
     afterwards each wave's read is partition-pruned to exactly its 1/W of
-    the bytes (run_extraction detects the wave=... layout automatically).
-    The production analog is an Iceberg table partitioned by the wave
-    column; the staged copy is also what you keep when the same corpus
+    the bytes (plan_extraction recognises the staged frame by its `chunk`
+    column).  The production analog is an Iceberg table partitioned by the
+    wave column; the staged copy is also what you keep when the same corpus
     will be extracted more than once."""
     from pyspark.sql import functions as F
 
-    if cfg.salt_buckets is None:
-        cfg.salt_buckets = derive_salt_buckets(df.select("conv_id", "turn_idx", "text"), cfg.num_chunks)
     # `role` rides along so a later role-restricted run over the staged
-    # layout can still filter (plan_extraction's prechunked branch); sources
-    # without the column stage role-less and such runs raise there
+    # layout can still filter; sources without the column stage role-less
+    # and such runs raise in plan_extraction
     keep = ["conv_id", "turn_idx", "text"] + (["role"] if "role" in df.columns else [])
-    cols = df.select(*keep)
-    salted = cols.withColumn(
-        "chunk",
-        F.pmod(
-            F.xxhash64(F.col("conv_id"), F.pmod(F.xxhash64(F.col("turn_idx")), F.lit(cfg.salt_buckets))),
-            F.lit(cfg.num_chunks),
-        ).cast("int"),
-    ).withColumn("wave", _wave_of(F.col("chunk"), cfg.num_waves))
+    salted = _with_chunk(df.select(*keep), cfg).withColumn(
+        "wave", _wave_of(F.col("chunk"), cfg.num_waves))
     salted.write.mode("overwrite").partitionBy("wave").parquet(staged_dir)
-    with open(os.path.join(staged_dir, "_partitioning.json"), "w", encoding="utf-8") as f:
-        json.dump({"num_chunks": cfg.num_chunks, "num_waves": cfg.num_waves,
-                   "salt_buckets": cfg.salt_buckets}, f)
+    _write_pin(staged_dir, cfg)
     return staged_dir
 
 
-def _is_staged(input_path: str | None) -> bool:
-    return bool(input_path) and os.path.exists(os.path.join(input_path, "_partitioning.json"))
+def _write_pin(directory: str, cfg: ExtractionJobConfig) -> None:
+    os.makedirs(directory, exist_ok=True)
+    with open(os.path.join(directory, "_partitioning.json"), "w", encoding="utf-8") as f:
+        json.dump({"num_chunks": cfg.num_chunks, "num_waves": cfg.num_waves,
+                   "salt_buckets": cfg.salt_buckets}, f)
+
+
+def _adopt_pin(directory: str | None, cfg: ExtractionJobConfig, what: str) -> bool:
+    """Check cfg against the partitioning pinned in `directory` and adopt its
+    salt_buckets; False when no pin exists.  Chunk and wave membership are a
+    function of the pin, so a mismatch would duplicate/drop rows."""
+    path = os.path.join(directory, "_partitioning.json") if directory else None
+    if not path or not os.path.exists(path):
+        return False
+    with open(path, encoding="utf-8") as f:
+        pin = json.load(f)
+    if pin["num_chunks"] != cfg.num_chunks or pin["num_waves"] != cfg.num_waves:
+        raise ValueError(
+            f"{what} was chunked with num_chunks={pin['num_chunks']}, "
+            f"num_waves={pin['num_waves']}; every run and resume must use the same values"
+        )
+    if cfg.salt_buckets is not None and cfg.salt_buckets != pin["salt_buckets"]:
+        raise ValueError(
+            f"{what} was salted with S={pin['salt_buckets']}, got salt_buckets={cfg.salt_buckets}"
+        )
+    cfg.salt_buckets = pin["salt_buckets"]
+    return True
 
 
 def lineage_rows(written, wave: int, golden=None):
     """Per-chunk lineage aggregate in the canonical LINEAGE_SCHEMA — the ONE
-    definition shared by the batch wave commit and the streaming foreachBatch
-    sink (stream_job.py), so a consumer written against either lineage table
-    reads both.  `wave` is the commit unit id (checkpoint wave in batch,
-    micro-batch id in streaming); `golden` an optional
+    definition behind every commit (`commit_unit`: the batch wave and the
+    streaming micro-batch), so a consumer written against either lineage
+    table reads both.  `wave` is the commit unit id (checkpoint wave in
+    batch, micro-batch id in streaming); `golden` an optional
     (conv_id, turn_idx, expected_text) frame for the per-chunk
     extraction-accuracy metric (null when no golden is configured)."""
     from pyspark.sql import functions as F
@@ -413,12 +427,32 @@ def _committed_waves(output_dir: str) -> set[int]:
 
 def read_lineage(spark, output_dir: str):
     """All committed lineage rows, or None when no wave has committed."""
-    paths = sorted(glob.glob(os.path.join(output_dir, "lineage", "wave=*")))
-    done = [p for p in paths if os.path.exists(os.path.join(p, "_SUCCESS"))]
+    done = sorted(_committed_waves(output_dir))
     if not done:
         return None
-    df = spark.read.schema(LINEAGE_SCHEMA).parquet(*done)
-    return df
+    return spark.read.schema(LINEAGE_SCHEMA).parquet(
+        *(os.path.join(output_dir, "lineage", f"wave={w}") for w in done)
+    )
+
+
+def commit_unit(spark, plan, output_dir: str, part: str, unit_id: int, golden,
+                iceberg_table: str | None = None) -> None:
+    """The ONE commit order for a batch wave or a streaming micro-batch,
+    each step idempotent: `plan` runs once into `data/<part>`; then, with
+    iceberg_table, one atomic snapshot (overwritePartitions) of the
+    COMMITTED files; then `lineage/<part>` from the same read-back, so
+    lineage never claims rows that did not commit.  Lineage is last
+    because it is the resume ledger."""
+    from pyspark.sql import functions as F
+
+    data_dir = os.path.join(output_dir, "data", part)
+    plan.write.mode("overwrite").parquet(data_dir)
+    written = spark.read.parquet(data_dir)
+    if iceberg_table:
+        written.withColumn("wave", F.lit(unit_id)).writeTo(iceberg_table).overwritePartitions()
+    lineage_rows(written, unit_id, golden).coalesce(1).write.mode("overwrite").parquet(
+        os.path.join(output_dir, "lineage", part)
+    )
 
 
 def run_extraction(
@@ -433,9 +467,10 @@ def run_extraction(
 ) -> dict:
     """Execute the job in resumable waves.  Returns run stats.
 
-    input_path: parquet path; or pass input_table to read a catalog table
-    (the production Iceberg source — any Spark catalog name resolves, and
-    Iceberg's scan supports the same pruning/pushdown the plan tests pin).
+    input_path: parquet path (raw transcripts or a `stage_chunked` copy); or
+    pass input_table to read a catalog table (the production Iceberg source
+    — any Spark catalog name resolves, and Iceberg's scan supports the same
+    pruning/pushdown the plan tests pin).
     fail_after_wave: test hook — raise after committing that many waves
     (simulates a mid-run kill for the resume test).
     """
@@ -444,124 +479,46 @@ def run_extraction(
     cfg = cfg or ExtractionJobConfig()
     if (input_path is None) == (input_table is None):
         raise ValueError("exactly one of input_path / input_table is required")
-    staged = _is_staged(input_path)
-    if staged:
-        # stage_chunked layout: adopt its pinned partitioning (the chunk
-        # column in the data was computed with it) and read the wave-
-        # partitioned copy so per-wave scans prune to 1/num_waves
-        with open(os.path.join(input_path, "_partitioning.json"), encoding="utf-8") as f:
-            sp = json.load(f)
-        if sp["num_chunks"] != cfg.num_chunks or sp["num_waves"] != cfg.num_waves:
-            raise ValueError(
-                f"staged input was chunked with num_chunks={sp['num_chunks']}, "
-                f"num_waves={sp['num_waves']}; the run must use the same values"
-            )
-        if cfg.salt_buckets is not None and cfg.salt_buckets != sp["salt_buckets"]:
-            raise ValueError(f"staged input was salted with S={sp['salt_buckets']}")
-        cfg.salt_buckets = sp["salt_buckets"]
+    # a staged input's chunk column was computed under its pin; the output's
+    # pin holds for its lifetime, so a resume never re-derives the salt
+    _adopt_pin(input_path, cfg, "staged input")
     df = spark.table(input_table) if input_table else spark.read.parquet(input_path)
-    if cfg.require_payload:
-        df = df.filter(F.col("text") != "")
-
-    # pin the partitioning parameters for the OUTPUT's lifetime: chunk (and
-    # therefore wave membership) is a function of (salt_buckets, num_chunks),
-    # so a resumed run MUST salt exactly like the committed waves — a
-    # re-derived sample sketch could land on a different S and silently
-    # duplicate/drop rows across the resume boundary
-    params_path = os.path.join(output_dir, "_partitioning.json")
-    if os.path.exists(params_path):
-        with open(params_path, encoding="utf-8") as f:
-            pinned = json.load(f)
-        if pinned["num_chunks"] != cfg.num_chunks or pinned["num_waves"] != cfg.num_waves:
-            raise ValueError(
-                f"output dir was written with num_chunks={pinned['num_chunks']}, "
-                f"num_waves={pinned['num_waves']}; resume must use the same values"
-            )
-        if cfg.salt_buckets is not None and cfg.salt_buckets != pinned["salt_buckets"]:
-            raise ValueError(
-                f"output dir was salted with S={pinned['salt_buckets']}, "
-                f"got salt_buckets={cfg.salt_buckets}"
-            )
-        cfg.salt_buckets = pinned["salt_buckets"]
-    else:
+    df = df.filter(F.col("text") != "")
+    if not _adopt_pin(output_dir, cfg, "output dir"):
         if cfg.salt_buckets is None:
-            cfg.salt_buckets = derive_salt_buckets(
-                df.select("conv_id", "turn_idx", "text"), cfg.num_chunks
-            )
-        os.makedirs(output_dir, exist_ok=True)
-        with open(params_path, "w", encoding="utf-8") as f:
-            json.dump({"num_chunks": cfg.num_chunks, "num_waves": cfg.num_waves,
-                       "salt_buckets": cfg.salt_buckets}, f)
+            cfg.salt_buckets = derive_salt_buckets(df, cfg.num_chunks)
+        _write_pin(output_dir, cfg)
 
     # broadcast once for the whole run; every wave's plan reuses the handles
     model_bc = spark.sparkContext.broadcast(model or CharModel.load(cfg.model_path))
     templates_bc = spark.sparkContext.broadcast(templates or [])
+    golden = spark.read.parquet(cfg.golden_path) if cfg.golden_path else None
+    iceberg_table = cfg.iceberg_table if cfg.iceberg_table and _iceberg_available(spark) else None
 
     # resume ledger = the lineage directories' commit markers, NOT the
     # lineage row values: an all-dropped wave commits an empty-but-valid
     # lineage file and must still be skipped on resume
     done_waves = _committed_waves(output_dir)
-
-    waves_run = 0
-    rows_written = 0
+    todo = [w for w in range(cfg.num_waves) if w not in done_waves]
     t_start = time.time()
-    for wave in range(cfg.num_waves):
-        data_dir = os.path.join(output_dir, "data", f"wave={wave}")
-        lin_dir = os.path.join(output_dir, "lineage", f"wave={wave}")
-        if wave in done_waves:
-            continue
-        # data committed but lineage lost -> idempotent overwrite
-        if os.path.exists(data_dir):
-            shutil.rmtree(data_dir, ignore_errors=True)
-
-        # per-wave plan: the wave predicate sits BELOW the kernel (on the
-        # pre-shuffle salted chunk), so this wave scans/shuffles/extracts
-        # only its own 1/num_waves of the rows; with a staged input the
-        # predicate is a PARTITION filter and even the scan reads 1/W
-        if staged:
-            wave_src = df.filter(F.col("wave") == wave).drop("wave")
-            wave_df = plan_extraction(
-                spark, wave_src, cfg, model_bc=model_bc, templates_bc=templates_bc,
-                prechunked=True,
-            )
-        else:
-            wave_df = plan_extraction(
-                spark, df, cfg, wave=wave, model_bc=model_bc, templates_bc=templates_bc
-            )
-        wave_df.write.mode("overwrite").parquet(data_dir)
-        if cfg.iceberg_table and _iceberg_available(spark):
-            # production path: one atomic Iceberg snapshot per wave
-            # (overwritePartitions on the wave partition -> retry-idempotent),
-            # fed from the COMMITTED parquet files so the kernel runs exactly
-            # once per wave and the snapshot's rows are the committed rows;
-            # the parquet wave directory stays the sandbox-testable system of
-            # record, so with a catalog configured this dual-writes during
-            # migration
-            (spark.read.parquet(data_dir).withColumn("wave", F.lit(wave))
-             .writeTo(cfg.iceberg_table).overwritePartitions())
-
-        # lineage derived from the COMMITTED files (read-back of the tiny
-        # metric columns only -> column-pruned scan), so lineage can never
-        # claim rows that did not commit
-        written = spark.read.parquet(data_dir)
-        golden = (
-            spark.read.parquet(cfg.golden_path) if cfg.golden_path else None
+    for n_run, wave in enumerate(todo, 1):
+        # per-wave plan: the wave predicate sits BELOW the kernel, so this
+        # wave scans/shuffles/extracts only its own 1/num_waves of the rows
+        # (with a staged input even the scan reads 1/W); a wave whose data
+        # committed but whose lineage was lost is overwritten idempotently
+        wave_df = plan_extraction(
+            spark, df, cfg, wave=wave, model_bc=model_bc, templates_bc=templates_bc
         )
-        lin = lineage_rows(written, wave, golden)
-        lin.coalesce(1).write.mode("overwrite").parquet(lin_dir)
-        waves_run += 1
-        # row count from the just-committed (tiny) lineage — not another
-        # pass over the wave's data
-        rows_written += (
-            spark.read.schema(LINEAGE_SCHEMA).parquet(lin_dir)
-            .agg(F.sum("rows_processed")).collect()[0][0] or 0
-        )
-        if fail_after_wave is not None and waves_run >= fail_after_wave:
+        commit_unit(spark, wave_df, output_dir, f"wave={wave}", wave, golden, iceberg_table)
+        if fail_after_wave is not None and n_run >= fail_after_wave:
             raise RuntimeError(f"injected failure after wave {wave}")
 
+    # one read of the (tiny) lineage just committed, not a pass over the data
+    rows_written = (read_lineage(spark, output_dir).filter(F.col("wave").isin(todo))
+                    .agg(F.sum("rows_processed")).collect()[0][0] or 0) if todo else 0
     return {
         "waves_total": cfg.num_waves,
-        "waves_run": waves_run,
+        "waves_run": len(todo),
         "waves_skipped": len(done_waves),
         "rows_written": rows_written,
         "wall_s": time.time() - t_start,

@@ -20,7 +20,7 @@ from __future__ import annotations
 
 import os
 
-from ..job import ExtractionJobConfig, lineage_rows, plan_extraction
+from ..job import ExtractionJobConfig, commit_unit, plan_extraction
 from ..kernel.classifier import CharModel
 
 __all__ = ["run_streaming_extraction", "streaming_events_hourly", "streaming_conv_progress",
@@ -147,21 +147,15 @@ def run_streaming_extraction(
         stream = pre_gate(stream)
 
     def process_batch(batch_df, batch_id: int):
-        df = batch_df.filter(F.col("text") != "") if cfg.require_payload else batch_df
+        df = batch_df.filter(F.col("text") != "")
         result = plan_extraction(
             df.sparkSession, df, cfg, model_bc=model_bc, templates_bc=templates_bc
         )
-        data_dir = os.path.join(output_dir, "data", f"batch={batch_id}")
-        result.write.mode("overwrite").parquet(data_dir)  # idempotent per batch id
-        written = df.sparkSession.read.parquet(data_dir)
-        # lineage in the CANONICAL batch LINEAGE_SCHEMA (job.lineage_rows):
-        # `wave` carries the micro-batch id, so one consumer reads the batch
-        # and streaming lineage tables interchangeably (pre-r3 the streaming
-        # schema was a column subset and broke such consumers)
-        lin = lineage_rows(written, int(batch_id), golden)
-        lin.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(output_dir, "lineage", f"batch={batch_id}")
-        )
+        # the batch job's commit order (job.commit_unit), no Iceberg
+        # snapshot: `batch=<id>` is idempotent per batch id, and the lineage
+        # is in the CANONICAL LINEAGE_SCHEMA with `wave` carrying the
+        # micro-batch id, so one consumer reads both lineage tables
+        commit_unit(df.sparkSession, result, output_dir, f"batch={batch_id}", int(batch_id), golden)
 
     writer = (
         stream.writeStream.foreachBatch(process_batch)

@@ -51,6 +51,10 @@ def main() -> None:
                     help="stage the input wave-partitioned at this path first, then run "
                          "from it (one scan+write; every wave's read is then pruned to 1/W)")
     args = ap.parse_args()
+    streaming = args.streaming.lower() == "true"
+    if streaming and (args.input_table or args.stage_to or not args.input):
+        raise SystemExit("--streaming requires --input (a file-stream directory); "
+                         "--input-table and --stage-to are batch-only")
 
     from pyspark.sql import SparkSession
 
@@ -69,10 +73,7 @@ def main() -> None:
         payload_roles=tuple(r for r in (args.roles or "").split(",") if r),
         quality_filter=args.quality_filter.lower() == "true",
     )
-    if args.streaming.lower() == "true":
-        if args.input_table or not args.input:
-            raise SystemExit("--streaming requires --input (a file-stream directory); "
-                             "--input-table is batch-only")
+    if streaming:
         run_streaming_extraction(spark, args.input, args.output, cfg)
         print(json.dumps({"mode": "streaming", "output": args.output}))
     else:

@@ -136,3 +136,23 @@ def test_quality_gate_sits_below_kernel(spark, entry_mod):
     gate = [p for p in filters if maps[0] < p < maps[1]]
     assert gate and all(p > exchanges[0] for p in gate)
     assert "quality_ok" in plan  # expression details live outside the tree section
+
+
+def test_staged_input_plan_prunes_partitions(spark, entry_mod, tmp_path):
+    """The engine's own plan over a stage_chunked copy: the wave is a
+    PARTITION filter on the scan (each wave reads 1/W of the bytes), the
+    salted chunk is read rather than recomputed, and the one shuffle stays
+    the only one."""
+    import os
+
+    from arabic_ocr_spark.job import ExtractionJobConfig, plan_extraction, stage_chunked
+    from arabic_ocr_spark.sources.synth import default_model_path
+
+    d = entry_mod.synth_dir_for("/root/testdata/sf0.001")
+    cfg = ExtractionJobConfig(num_chunks=12, num_waves=3, model_path=default_model_path())
+    staged = str(tmp_path / "staged")
+    stage_chunked(spark, spark.read.parquet(os.path.join(d, "transcripts.parquet")), cfg, staged)
+    plan = _formatted(spark, plan_extraction(spark, spark.read.parquet(staged), cfg, wave=1))
+    assert "PartitionFilters: [isnotnull(wave" in plan
+    assert _tree_count(plan, "Exchange") == 1
+    assert "xxhash64" not in plan

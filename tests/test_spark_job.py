@@ -317,3 +317,14 @@ def test_input_path_xor_table_enforced(spark, synth_dir, tmp_path):
                        _cfg(), input_table="also_a_table")
     with pytest.raises(ValueError, match="exactly one of"):
         run_extraction(spark, None, str(tmp_path / "o2"), _cfg())
+
+
+def test_role_filter_without_role_column_raises_at_plan_time(spark):
+    """A raw frame with no `role` column fails the role filter with the same
+    ValueError as a role-less staged layout, while the plan is built (not
+    deep inside a Spark job)."""
+    from arabic_ocr_spark.job import plan_extraction
+
+    df = spark.createDataFrame([], "conv_id string, turn_idx int, text string")
+    with pytest.raises(ValueError, match="no 'role' column"):
+        plan_extraction(spark, df, _cfg(payload_roles=("user",)))
