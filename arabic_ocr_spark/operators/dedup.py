@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, functions as F
 __all__ = ["exact_dup_groups", "minhash_signatures", "lsh_candidate_pairs",
            "jaccard_verified_pairs", "simhash", "simhash_expr",
            "min_label_components", "dedup_groups", "auto_bucket_cap",
-           "resolve_bucket_cap", "bucket_audit", "lsh_bucket_audit"]
+           "resolve_bucket_cap", "bucket_audit", "band_pairs", "lsh_bucket_audit"]
 
 
 def auto_bucket_cap(n_rows: int, c: float = 8.0) -> int:
@@ -168,57 +168,73 @@ def _text_band_buckets(docs: DataFrame, k: int, num_hashes: int, band_size: int)
     return sigs.select("doc_id", F.posexplode(band_keys).alias("band", "band_key"))
 
 
+def band_pairs(buckets: DataFrame, id_col: str, cap: int | None,
+               out_a: str, out_b: str) -> DataFrame:
+    """Distinct (out_a < out_b) id pairs sharing a band bucket: the ONE
+    band self-join behind both LSH ladders (lsh_candidate_pairs and
+    similarity.embedding_neardup_candidates).  `buckets` holds `id_col`
+    plus the bucket key in every other column (bucket_audit's convention);
+    the join is a hash equi-join on the key with l.id < r.id.
+
+    cap — the HOT-BUCKET guard (resolve_bucket_cap's output): a
+    mass-templated cluster of m near-identical rows (which survives exact
+    dedup whenever any byte differs) puts all m in one band bucket and
+    makes the self-join quadratic in m, the one quadratic the collision
+    model cannot bound.  With a cap, buckets larger than `cap` contribute
+    only their STAR around the bucket's minimum id — O(m) pairs that still
+    connect every member to the anchor for downstream connected-components
+    grouping, while the intra-cluster pair flood is skipped.  The filter is
+    applied to the join's LEFT input only, so the quadratic intermediate
+    never materializes.  cap=None is the unguarded join.  At the gated
+    fixture scales the "auto" cap ceil(8*sqrt(n)) never binds on natural
+    buckets, so the default path keeps exact, oracle-checked banded
+    semantics.
+
+    RECALL CAVEAT when the cap binds: a hot bucket only guarantees its
+    members share ONE band (moderate similarity), NOT that they are
+    near-identical to the anchor — a chain-shaped cluster (a~b~c with
+    anchor!~c above threshold) can lose the b-c pair the uncapped path plus
+    verify+CC would have kept, unless b and c also co-occur in some
+    below-cap bucket.  Audit bucket composition (bucket_audit, via
+    lsh_bucket_audit / neardup_bucket_audit at the same parameters) before
+    relying on a cap in recall-sensitive paths."""
+    key_cols = [c for c in buckets.columns if c != id_col]
+    left = buckets
+    if cap is not None:
+        sizes = buckets.groupBy(*key_cols).agg(
+            F.count("*").alias("bsz"), F.min(id_col).alias("anchor")
+        )
+        left = (
+            buckets.join(sizes, key_cols)
+            .filter((F.col("bsz") <= cap) | (F.col(id_col) == F.col("anchor")))
+            .select(*buckets.columns)
+        )
+    # key equalities, then l.id < r.id (join() and-folds the list in order)
+    on = [F.col(f"l.{c}") == F.col(f"r.{c}") for c in key_cols]
+    on.append(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
+    return (
+        left.alias("l").join(buckets.alias("r"), on)
+        .select(F.col(f"l.{id_col}").alias(out_a), F.col(f"r.{id_col}").alias(out_b))
+        .distinct()
+    )
+
+
 def lsh_candidate_pairs(docs: DataFrame, k: int = 7, num_hashes: int = 8, band_size: int = 2,
                         max_bucket_size: int | str | None = "auto",
                         n_rows: int | None = None) -> DataFrame:
     """Near-duplicate candidate pairs (doc_a < doc_b) sharing at least one
     LSH band.  Bands of `band_size` consecutive minhashes; the self-join is
-    on the int64-folded band key (see _text_band_buckets).
+    band_pairs on the int64-folded band key (see _text_band_buckets).
 
-    max_bucket_size — the HOT-BUCKET guard: a mass-templated cluster of m
-    near-identical documents (which survives exact dedup whenever any byte
-    differs) puts all m in one band bucket and makes the self-join
-    quadratic in m.  With a cap, buckets larger than max_bucket_size
-    contribute only their STAR around the bucket's minimum doc_id — O(m)
-    pairs, filtered on the join's LEFT input so the quadratic intermediate
-    never materializes.  The default "auto" derives the cap as
+    max_bucket_size — the hot-bucket guard's cap, resolved by
+    resolve_bucket_cap: the default "auto" derives it as
     auto_bucket_cap(n) = ceil(8*sqrt(n)) (pass n_rows — a catalog/metadata
-    count — to skip the plan-time count), which never binds on natural
-    near-dup buckets at the gated scales, so the default path stays exactly
-    oracle-checked; None disables the guard entirely.
-
-    RECALL CAVEAT when the cap binds: a hot bucket only guarantees its
-    members share one minhash band (moderate similarity), NOT that they are
-    near-identical to the anchor — a chain-shaped cluster (a~b~c with
-    anchor!~c above the Jaccard threshold) can lose the b-c pair that the
-    uncapped path plus verify+CC would have kept, unless b and c also
-    co-occur in some below-cap bucket.  Audit bucket composition
-    (lsh_bucket_audit) before relying on a cap in recall-sensitive paths."""
+    count — to skip the plan-time count); None disables the guard.  See
+    band_pairs for the star rule and its recall caveat, and
+    lsh_bucket_audit for the audit."""
     buckets = _text_band_buckets(docs, k, num_hashes, band_size)
-    max_bucket_size = resolve_bucket_cap(max_bucket_size, docs, n_rows)
-    if max_bucket_size is not None:
-        sizes = buckets.groupBy("band", "band_key").agg(
-            F.count("*").alias("bsz"), F.min("doc_id").alias("anchor")
-        )
-        left = (
-            buckets.join(sizes, ["band", "band_key"])
-            .filter((F.col("bsz") <= max_bucket_size) | (F.col("doc_id") == F.col("anchor")))
-            .select("doc_id", "band", "band_key")
-            .alias("l")
-        )
-    else:
-        left = buckets.alias("l")
-    right = buckets.alias("r")
-    return (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.band_key") == F.col("r.band_key"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    cap = resolve_bucket_cap(max_bucket_size, docs, n_rows)
+    return band_pairs(buckets, "doc_id", cap, "doc_a", "doc_b")
 
 
 def lsh_bucket_audit(docs: DataFrame, k: int = 7, num_hashes: int = 8, band_size: int = 2,
@@ -447,11 +463,6 @@ def simhash_expr(text_col, bits: int = 16):
 
 
 def simhash(docs: DataFrame, bits: int = 16) -> DataFrame:
-    """Per-document SimHash over whitespace tokens (see _simhash_total).
+    """Per-document SimHash over whitespace tokens (see simhash_expr).
     Returns (doc_id, simhash)."""
-    toks = F.filter(F.split(F.trim(F.col("text")), r"\s+"), lambda t: t != F.lit(""))
-    return docs.select("doc_id", F.col("text"), ).withColumn("toks", toks).select(
-        "doc_id",
-        F.when(F.size("toks") > 0, _simhash_total(F.col("toks"), bits))
-        .otherwise(F.lit(0)).cast("long").alias("simhash"),
-    )
+    return docs.select("doc_id", simhash_expr(F.col("text"), bits).alias("simhash"))

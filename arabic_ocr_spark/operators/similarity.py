@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from arabic_ocr_spark.operators.dedup import bucket_audit, resolve_bucket_cap
+from arabic_ocr_spark.operators.dedup import band_pairs, bucket_audit, resolve_bucket_cap
 
 __all__ = ["cosine_topk", "lsh_ann_topk", "lsh_ann_candidates", "ann_recall",
            "embedding_dup_pairs", "embedding_neardup_candidates", "embedding_neardup_hi",
@@ -39,12 +39,39 @@ def _as_double(col):
     return F.transform(col, lambda x: x.cast("double"))
 
 
+def _vectors(embeddings: DataFrame) -> DataFrame:
+    """(vec_id, v double[]): the projection every operator here reads."""
+    return embeddings.select("vec_id", _as_double("embedding").alias("v"))
+
+
+def _verify_cosine(cand: DataFrame, vecs: DataFrame, threshold: float) -> DataFrame:
+    """(vec_a, vec_b, sim_r): exact re-verification of candidate pairs —
+    both vectors joined in, cosine by the sequential-fold HOF expression
+    (bit-identical to the DuckDB oracle's), rounded to 4, kept at
+    >= threshold."""
+    va = vecs.select(F.col("vec_id").alias("vec_a"), F.col("v").alias("va"))
+    vb = vecs.select(F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"))
+    return (
+        cand.join(va, "vec_a")
+        .join(vb, "vec_b")
+        .select("vec_a", "vec_b", F.round(_cosine(F.col("va"), F.col("vb")), 4).alias("sim_r"))
+        .filter(F.col("sim_r") >= threshold)
+    )
+
+
+def _rank_topk(sims: DataFrame, k: int) -> DataFrame:
+    """Top-k rows per query_id of (query_id, neighbor_id, sim_r), ranked
+    deterministically by (sim_r desc, neighbor_id asc) into `rank`."""
+    w = Window.partitionBy("query_id").orderBy(F.col("sim_r").desc(), F.col("neighbor_id").asc())
+    return sims.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
 def cosine_topk(embeddings: DataFrame, n_queries: int = 5, k: int = 10) -> DataFrame:
     """Top-k cosine neighbours for the first n_queries vectors.
 
     Output: (query_id, neighbor_id, sim_r, rank) with sim rounded to 4 and
     deterministic (sim desc, neighbor_id asc) ranking."""
-    vecs = embeddings.select("vec_id", _as_double("embedding").alias("v"))
+    vecs = _vectors(embeddings)
     queries = vecs.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("q")
     )
@@ -56,11 +83,7 @@ def cosine_topk(embeddings: DataFrame, n_queries: int = 5, k: int = 10) -> DataF
             F.round(_cosine(F.col("q"), F.col("v")), 4).alias("sim_r"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim_r").desc(), F.col("neighbor_id").asc())
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _rank_topk(sims, k)
 
 
 def embedding_dup_pairs(embeddings: DataFrame, threshold: float = 0.38,
@@ -95,7 +118,7 @@ def embedding_dup_pairs(embeddings: DataFrame, threshold: float = 0.38,
     the honest cost floor for an exact low-threshold similarity join."""
     import pandas as pd
 
-    vecs = embeddings.select("vec_id", _as_double("embedding").alias("v"))
+    vecs = _vectors(embeddings)
     # n only sizes the block grid — pass n_rows (e.g. a catalog/metadata row
     # count) to avoid the planning-time full pass; any approximate count of
     # the right magnitude yields the same task layout
@@ -148,15 +171,7 @@ def embedding_dup_pairs(embeddings: DataFrame, threshold: float = 0.38,
             yield pd.DataFrame({"vec_a": a, "vec_b": b})
 
     cand = tasks.mapInPandas(gemm_candidates, "vec_a bigint, vec_b bigint")
-    va = vecs.select(F.col("vec_id").alias("vec_a"), F.col("v").alias("va"))
-    vb = vecs.select(F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"))
-    return (
-        cand.join(va, "vec_a")
-        .join(vb, "vec_b")
-        .select("vec_a", "vec_b", F.round(_cosine(F.col("va"), F.col("vb")), 4).alias("sim_r"))
-        .filter(F.col("sim_r") >= threshold)
-        .select("vec_a", "vec_b", "sim_r")
-    )
+    return _verify_cosine(cand, vecs, threshold)
 
 
 def _band_buckets(vecs: DataFrame, n_bands: int, rows_per_band: int, seed: int) -> DataFrame:
@@ -218,62 +233,22 @@ def embedding_neardup_candidates(embeddings: DataFrame, n_bands: int = 16,
     a pure function of the seed, so recall is a testable constant, not a
     random variable.
 
-    max_bucket_size — the HOT-BUCKET guard: a degenerate band bucket (a
-    mass-templated near-identical cluster of m vectors) otherwise makes the
-    self-join quadratic in m, the one quadratic the collision model cannot
-    bound (it assumes near-orthogonal background).  With a cap, buckets
-    larger than max_bucket_size contribute only their STAR around the
-    bucket's minimum vec_id — O(m) pairs that still connect every member
-    to the anchor for downstream connected-components grouping, while the
-    intra-cluster pair flood (m^2/2 candidate rows all verifying ~1.0) is
-    skipped.  The filter is applied to the join's LEFT input, so the
-    quadratic intermediate is never materialized.  The default "auto"
-    derives the cap as auto_bucket_cap(n) = ceil(8*sqrt(n)) (pass n_rows to
-    skip the plan-time count); at the gated fixture scales natural buckets
-    sit far below it (max 9 vs cap 189+), so the default path keeps exact
-    banded semantics; None disables the guard entirely.
-
-    RECALL CAVEAT when the cap binds: a hot bucket only guarantees its
-    members agree on ONE band's sign bits (moderate similarity), NOT that
-    they are near-identical to the anchor — a chain-shaped cluster (a~b~c
-    with anchor!~c above threshold) can lose the b-c pair the uncapped
-    path plus verify+CC would have kept, unless b and c also co-occur in
-    some below-cap bucket.  Audit bucket composition before relying on a
-    cap in recall-sensitive paths: neardup_bucket_audit reports hot-bucket
-    count and a dropped-pair upper bound at the same parameters.
+    max_bucket_size — the hot-bucket guard's cap, resolved by
+    resolve_bucket_cap: the default "auto" derives it as
+    auto_bucket_cap(n) = ceil(8*sqrt(n)) (pass n_rows to skip the
+    plan-time count); at the gated fixture scales natural buckets sit far
+    below it (max 9 vs cap 189+); None disables the guard.  See
+    dedup.band_pairs for the star rule and its recall caveat, and
+    neardup_bucket_audit for the audit.
 
     Scale shape: signature pass is map-only (one GEMM per Arrow batch); the
     only shuffles are the self-join on the short (band, key) buckets and the
     final distinct — identical to the MinHash-LSH text ladder, which is the
     point: at 0.95+ this replaces a quadratic GEMM with a bucket join."""
-    vecs = embeddings.select("vec_id", _as_double("embedding").alias("v"))
+    vecs = _vectors(embeddings)
     buckets = _band_buckets(vecs, n_bands, rows_per_band, seed)
-    max_bucket_size = resolve_bucket_cap(max_bucket_size, vecs, n_rows)
-    if max_bucket_size is not None:
-        sizes = buckets.groupBy("band", "key").agg(
-            F.count("*").alias("bsz"), F.min("vec_id").alias("anchor")
-        )
-        annotated = buckets.join(sizes, ["band", "key"])
-        left = (
-            annotated.filter(
-                (F.col("bsz") <= max_bucket_size) | (F.col("vec_id") == F.col("anchor"))
-            )
-            .select("vec_id", "band", "key")
-            .alias("l")
-        )
-        right = buckets.alias("r")
-    else:
-        left, right = buckets.alias("l"), buckets.alias("r")
-    return (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.key") == F.col("r.key"))
-            & (F.col("l.vec_id") < F.col("r.vec_id")),
-        )
-        .select(F.col("l.vec_id").alias("vec_a"), F.col("r.vec_id").alias("vec_b"))
-        .distinct()
-    )
+    cap = resolve_bucket_cap(max_bucket_size, vecs, n_rows)
+    return band_pairs(buckets, "vec_id", cap, "vec_a", "vec_b")
 
 
 def neardup_bucket_audit(embeddings: DataFrame, n_bands: int = 16,
@@ -285,7 +260,7 @@ def neardup_bucket_audit(embeddings: DataFrame, n_bands: int = 16,
     dropped_pairs_ubound).  Run it before enabling a cap on a new corpus —
     and alongside the guarded job in production — so a binding cap is a
     measured, inspected event rather than silent pair loss."""
-    vecs = embeddings.select("vec_id", _as_double("embedding").alias("v"))
+    vecs = _vectors(embeddings)
     cap = resolve_bucket_cap(max_bucket_size, vecs, n_rows)
     return bucket_audit(_band_buckets(vecs, n_bands, rows_per_band, seed), cap, "vec_id")
 
@@ -346,8 +321,8 @@ def embedding_neardup_hi(embeddings: DataFrame, threshold: float = 0.95,
     banding.  max_bucket_size forwards the hot-bucket star guard, ON by
     default at the auto cap ceil(8*sqrt(n)) — non-binding on natural
     buckets, capping only mass-templated degenerate clusters (see
-    embedding_neardup_candidates for the chain-cluster recall caveat when
-    it binds, and neardup_bucket_audit for the audit).  For LOW thresholds
+    dedup.band_pairs for the chain-cluster recall caveat when it binds,
+    and neardup_bucket_audit for the audit).  For LOW thresholds
     (< ~0.6) use embedding_dup_pairs — there banding cannot prune and the
     exact blocked GEMM is the honest cost floor (see its docstring).  The
     verify stage recomputes cosine with the sequential-fold HOF expression,
@@ -358,7 +333,7 @@ def embedding_neardup_hi(embeddings: DataFrame, threshold: float = 0.95,
             f"at threshold={threshold} banding does not prune — use "
             f"embedding_dup_pairs (exact blocked GEMM) instead"
         )
-    vecs = embeddings.select("vec_id", _as_double("embedding").alias("v"))
+    vecs = _vectors(embeddings)
     # one count serves both auto-derivations (banding AND the bucket cap)
     n = n_rows
     if n is None and (n_bands is None or rows_per_band is None or max_bucket_size == "auto"):
@@ -370,15 +345,7 @@ def embedding_neardup_hi(embeddings: DataFrame, threshold: float = 0.95,
     max_bucket_size = resolve_bucket_cap(max_bucket_size, vecs, n)
     cand = embedding_neardup_candidates(embeddings, n_bands, rows_per_band, seed,
                                         max_bucket_size)
-    va = vecs.select(F.col("vec_id").alias("vec_a"), F.col("v").alias("va"))
-    vb = vecs.select(F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"))
-    return (
-        cand.join(va, "vec_a")
-        .join(vb, "vec_b")
-        .select("vec_a", "vec_b", F.round(_cosine(F.col("va"), F.col("vb")), 4).alias("sim_r"))
-        .filter(F.col("sim_r") >= threshold)
-        .select("vec_a", "vec_b", "sim_r")
-    )
+    return _verify_cosine(cand, vecs, threshold)
 
 
 def ann_recall(embeddings: DataFrame, n_queries: int = 5, k: int = 10,
@@ -426,7 +393,7 @@ def lsh_ann_candidates(embeddings: DataFrame, n_queries: int = 5,
     same parquet floats (see __spark_entry__._sql_lsh_ann_candidates).
     The top-k ranked over these candidates is approximate only in that it
     can miss true neighbours; ann_recall measures how many."""
-    vecs = embeddings.select("vec_id", _as_double("embedding").alias("v"))
+    vecs = _vectors(embeddings)
     # table t = band t of the shared banding primitive (seeded planes)
     buckets = _band_buckets(vecs, n_tables, n_planes, seed=seed)
     qbuckets = (
@@ -472,7 +439,7 @@ def lsh_ann_topk(embeddings: DataFrame, n_queries: int = 5, k: int = 10,
     true neighbours is far higher and the same banding prunes hard).  It is
     the engine's one approximate top-k: model-free, with no training
     pass."""
-    vecs = embeddings.select("vec_id", _as_double("embedding").alias("v"))
+    vecs = _vectors(embeddings)
     cand_ids = lsh_ann_candidates(embeddings, n_queries, n_planes, n_tables)
     queries = vecs.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("q")
@@ -487,5 +454,4 @@ def lsh_ann_topk(embeddings: DataFrame, n_queries: int = 5, k: int = 10,
             F.round(_cosine(F.col("q"), F.col("v")), 4).alias("sim_r"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim_r").desc(), F.col("neighbor_id").asc())
-    return sims.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _rank_topk(sims, k)

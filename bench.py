@@ -37,8 +37,9 @@ def _calibrate(ms: float = 600.0) -> float:
     return round(total / (time.perf_counter() - t0) / 1e6, 2)
 
 
-# per-session result caches shared between driver queries (__spark_entry__
-# _extraction_plan/_dedup_chain/_ann_chain/_profile_chain): the FIRST query
+# the per-session result cache shared between driver queries
+# (__spark_entry__._cached_stage, behind _extraction_plan/_dedup_chain/
+# _ann_chain/_profile_chain): the FIRST query
 # of a group in bench order pays the full operator cost, later members time
 # projection-only reads of the materialized partitions.  Annotated in the
 # JSON so a later-member timing is never misread as standalone operator cost.

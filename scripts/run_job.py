@@ -25,6 +25,10 @@ from __future__ import annotations
 import argparse
 import json
 
+# boolean flags take exactly true/false (any case): "yes" or "1" is an error,
+# not a silent false
+BOOL = {"type": str.lower, "choices": ("true", "false")}
+
 
 def main() -> None:
     ap = argparse.ArgumentParser()
@@ -38,20 +42,20 @@ def main() -> None:
     ap.add_argument("--salt", type=int, default=None,
                     help="salt buckets; omit to derive from the sampled skew sketch")
     ap.add_argument("--golden", default=None, help="golden parquet for per-chunk extraction_acc lineage")
-    ap.add_argument("--dedup-payloads", default="false",
+    ap.add_argument("--dedup-payloads", default="false", **BOOL,
                     help="extract once per distinct payload and join back (duplicate-heavy corpora)")
     ap.add_argument("--roles", default=None,
                     help="comma-separated role filter (e.g. user,assistant); works on "
                          "direct, table and staged inputs")
-    ap.add_argument("--quality-filter", default="false",
+    ap.add_argument("--quality-filter", default="false", **BOOL,
                     help="drop payloads that fail the ink/line quality gate BELOW the "
                          "kernel (dirty corpora skip kernel+shuffle cost on junk)")
-    ap.add_argument("--streaming", default="false")
+    ap.add_argument("--streaming", default="false", **BOOL)
     ap.add_argument("--stage-to", default=None,
                     help="stage the input wave-partitioned at this path first, then run "
                          "from it (one scan+write; every wave's read is then pruned to 1/W)")
     args = ap.parse_args()
-    streaming = args.streaming.lower() == "true"
+    streaming = args.streaming == "true"
     if streaming and (args.input_table or args.stage_to or not args.input):
         raise SystemExit("--streaming requires --input (a file-stream directory); "
                          "--input-table and --stage-to are batch-only")
@@ -69,9 +73,9 @@ def main() -> None:
         salt_buckets=args.salt,
         model_path=args.model or default_model_path(),
         golden_path=args.golden,
-        dedup_payloads=args.dedup_payloads.lower() == "true",
+        dedup_payloads=args.dedup_payloads == "true",
         payload_roles=tuple(r for r in (args.roles or "").split(",") if r),
-        quality_filter=args.quality_filter.lower() == "true",
+        quality_filter=args.quality_filter == "true",
     )
     if streaming:
         run_streaming_extraction(spark, args.input, args.output, cfg)

@@ -156,3 +156,44 @@ def test_staged_input_plan_prunes_partitions(spark, entry_mod, tmp_path):
     assert "PartitionFilters: [isnotnull(wave" in plan
     assert _tree_count(plan, "Exchange") == 1
     assert "xxhash64" not in plan
+
+
+def _band_join(plan):
+    """The band self-join of a candidate operator's executed plan: the one
+    join whose condition carries the l.id < r.id inequality."""
+    nodes = [plan.inputPlan() if plan.nodeName() == "AdaptiveSparkPlan" else plan]
+    joins = []
+    while nodes:
+        node = nodes.pop()
+        if "Join" in node.nodeName() and " < " in node.simpleString(100):
+            joins.append(node)
+        kids = node.children()
+        nodes.extend(kids.apply(i) for i in range(kids.size()))
+    assert len(joins) == 1
+    return joins[0]
+
+
+@pytest.mark.parametrize("op, table, id_col, source", [
+    ("lsh_candidate_pairs", "documents", "doc_id", "Generate"),
+    ("embedding_neardup_candidates", "embeddings", "vec_id", "MapInPandas"),
+])
+def test_bucket_guard_filters_left_join_input_only(spark, op, table, id_col, source):
+    """The hot-bucket star guard (dedup.band_pairs) at an int cap: the
+    bucket-size aggregate and the `bsz <= cap OR id = anchor` filter sit on
+    the band join's LEFT input, and the right input is the unfiltered bucket
+    table — the quadratic intermediate of a hot bucket never materializes.
+    Unguarded (None), the plan carries no size aggregate at all."""
+    from arabic_ocr_spark.operators import dedup, similarity
+
+    fn = getattr(dedup, op, None) or getattr(similarity, op)
+    df = spark.read.parquet(f"/root/testdata/sf0.001/{table}.parquet")
+
+    join = _band_join(fn(df, max_bucket_size=10)._jdf.queryExecution().executedPlan())
+    left, right = join.left().toString(), join.right().toString()
+    assert "count(1)" in left and "anchor" in left
+    assert re.search(rf"\(bsz#\d+L? <= 10\) OR \({id_col}#\d+L? = anchor#\d+L?\)", left)
+    assert "Aggregate" not in right and "Join" not in right and "bsz" not in right
+    assert source in right  # the bucket table itself
+
+    unguarded = fn(df, max_bucket_size=None)._jdf.queryExecution().executedPlan().toString()
+    assert "count(1)" not in unguarded and "bsz" not in unguarded and "anchor" not in unguarded

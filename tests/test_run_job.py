@@ -1,5 +1,5 @@
-"""scripts/run_job.py argument checks (no JVM): a bad flag combination must
-exit before any SparkSession is created."""
+"""scripts/run_job.py argument checks (no JVM): a bad flag combination or
+value must exit before any SparkSession is created."""
 
 import importlib.util
 import os
@@ -33,3 +33,14 @@ def test_streaming_rejects_batch_only_flags(monkeypatch, extra):
     monkeypatch.setattr(sys, "argv", ["run_job.py", "--output", "out", "--streaming", "true", *extra])
     with pytest.raises(SystemExit, match="batch-only"):
         _load_main()()
+
+
+@pytest.mark.parametrize("flag", ["--streaming", "--dedup-payloads", "--quality-filter"])
+@pytest.mark.parametrize("value", ["yes", "1"])
+def test_boolean_flags_accept_only_true_or_false(monkeypatch, capsys, flag, value):
+    monkeypatch.setattr(SparkSession, "builder", _NoSession())
+    monkeypatch.setattr(sys, "argv", ["run_job.py", "--input", "in", "--output", "out", flag, value])
+    with pytest.raises(SystemExit) as exc:
+        _load_main()()
+    assert exc.value.code == 2  # argparse usage error
+    assert "invalid choice" in capsys.readouterr().err

@@ -1,6 +1,6 @@
 """Similarity operators: exactness of the blocked-GEMM near-dup join vs a
 brute-force twin, the LSH ANN recall gate, and DuckDB parity of the ANN
-suite."""
+suite and the curation queries."""
 
 import glob
 import importlib.util
@@ -79,15 +79,21 @@ def test_lsh_projection_margin_on_fixtures():
         assert margin > 1e-9, f"{path}: min |projection| {margin:.3g} <= 1e-9"
 
 
-def test_ann_suite_matches_duckdb_oracles(spark):
-    """The ANN driver queries equal their DuckDB twins value for value at
-    sf0.001 (tools/check_oracles.py's comparison, run in tier-1)."""
+@pytest.mark.parametrize("only", [
+    {"cosine_topk", "ann_lsh_candidates", "ann_lsh_topk", "ann_lsh_recall"},
+    {"minhash_lsh_pairs", "jaccard_pairs", "dedup_groups", "curated_docs", "simhash",
+     "embedding_dup_pairs", "embedding_neardup_cands", "embedding_neardup_hi"},
+], ids=["ann", "curation"])
+def test_ann_suite_matches_duckdb_oracles(spark, only):
+    """The ANN suite, and the curation queries built on the shared band
+    join, cosine verify and SimHash, equal their DuckDB twins value for
+    value at sf0.001 (tools/check_oracles.py's comparison, run in
+    tier-1)."""
     tool = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                         "tools", "check_oracles.py")
     spec = importlib.util.spec_from_file_location("check_oracles", tool)
     check_oracles = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(check_oracles)
-    only = {"cosine_topk", "ann_lsh_candidates", "ann_lsh_topk", "ann_lsh_recall"}
     assert check_oracles.check(spark, SF, only) == []
 
 
